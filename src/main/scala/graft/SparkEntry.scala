@@ -100,7 +100,7 @@ object SparkEntry {
       val dir = scratchDir("q33events")
       val marginMicros = 366L * 24 * 3600 * 1000000L
       val sentinelPart: java.nio.file.Path = footerMaxTsMicros(s, t(sfDir, "events")) match {
-        case Some(maxTs) if maxTs + marginMicros < Year3000Micros =>
+        case Some(maxTs) if maxTs < Year3000Micros - marginMicros =>
           val sentDir = scratchDir("q33sentinel")
           val in = getClass.getResourceAsStream("/graft/q33-sentinel.parquet")
           require(in != null, "missing resource /graft/q33-sentinel.parquet")
@@ -180,14 +180,22 @@ object SparkEntry {
       val target = java.nio.file.Paths.get(t(sfDir, "documents")).toAbsolutePath
       val dir = scratchDir("q31stage")
       if (java.nio.file.Files.isDirectory(target)) {
-        // multi-file corpus: link each part file into the stage dir
+        // multi-file corpus: link each part file into the stage dir. The
+        // `doc_` prefix keeps a part named `sentinel.parquet` from colliding
+        // with the sentinel link; a corpus with no top-level part file
+        // (e.g. a partitioned layout) fails here instead of streaming empty
         val ls = java.nio.file.Files.list(target)
+        var linked = 0
         try ls.forEach { p =>
           if (java.nio.file.Files.isRegularFile(p) &&
-              p.getFileName.toString.endsWith(".parquet"))
+              p.getFileName.toString.endsWith(".parquet")) {
             java.nio.file.Files.createSymbolicLink(
-              java.nio.file.Paths.get(dir, p.getFileName.toString), p)
+              java.nio.file.Paths.get(dir, s"doc_${p.getFileName}"), p)
+            linked += 1
+          }
         } finally ls.close()
+        if (linked == 0)
+          throw new IllegalStateException(s"no parquet part file directly under $target")
       } else
         java.nio.file.Files.createSymbolicLink(
           java.nio.file.Paths.get(dir, "documents.parquet"), target)

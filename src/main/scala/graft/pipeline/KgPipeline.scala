@@ -26,7 +26,10 @@ import scala.jdk.CollectionConverters._
   *   3. LINK + DECIDE — `mapPartitions` over candidate labels: each task
   *      embeds its batch, kNN-retrieves bases from the broadcast index
   *      (ICON manual mode with auto_bases, icon.py:515-556), and runs the
-  *      enhanced traversal (P3) with executor-local batched scoring.
+  *      enhanced traversal (P3) with executor-local batched scoring. A
+  *      round-sized round (≤ [[DriverRows]] candidates) returns decisions,
+  *      lineage and freshly scored pairs in one `collect`; larger rounds
+  *      keep them distributed.
   *   4. COMMIT — decisions, deterministically ordered, merge into the edge
   *      delta on the driver with P4 cycle screening; new ids allocated
   *      densely from max(id)+1.
@@ -34,6 +37,10 @@ import scala.jdk.CollectionConverters._
   *      near-dups among new concepts) → connected components → merge.
   *   6. CHECKPOINT — nodes/edges/scored-pairs/lineage parquet per round +
   *      COMMIT marker: the run is resumable from the last complete round.
+  *      Tables built on the driver (deltas, lineage, provenance, a
+  *      round-sized round's scored pairs) are written by the driver
+  *      ([[LocalParquet]], no Spark job); compaction snapshots and
+  *      distributed data by Spark.
   *
   * The corpus is the distributed axis; the taxonomy is broadcast-sized
   * (reference scale: ≤ ~10^6 concepts). Decisions within a round share the
@@ -46,6 +53,18 @@ object KgPipeline {
   case class PipelineConfig(
       rounds: Int = 2,
       retrieveSize: Int = 5,
+      // at most DriverRows (100000) the round is round-sized: its decide
+      // output comes to the driver in one collect. A candidate's fresh
+      // pairs follow its search space (the retrieveSize seeds' paths, and
+      // above annNodeThreshold the maxChildFanout cap), not the snapshot
+      // size: 9.95 pairs per candidate against the seed taxonomy, 11.0
+      // against resumed 43k-, 196k- and 980k-node snapshots. Measured at
+      // the bound (100000 candidates, local[4]): the seed run holds ~180 MB
+      // of driver heap after GC (~140 MB pairs, ~16 MB decisions); against
+      // the 980k-node snapshot the collected round is 1.1M pairs, ~156 MB
+      // of pairs and ~16 MB of decisions, from a 58 MB serialized result
+      // (spark.driver.maxResultSize defaults to 1 GB). Above the bound
+      // decisions and pairs stay distributed.
       maxCandidatesPerRound: Int = 500,
       minMentionFreq: Long = 2L,
       icon: IconConfig = IconConfig(mode = "manual", inputConcepts = Seq("_")),
@@ -245,13 +264,45 @@ object KgPipeline {
                         rowsIn: Long, rowsOut: Long, scoredPairs: Long, wallMs: Long)
   case class ScoredPair(subLabel: String, supLabel: String, p: Double)
 
-  /** `decisions` and `scored` are distributed datasets that never transit
-    * the driver whole — run() spills decisions to the round's parquet and
-    * streams the commit from a sorted local iterator; `release` unpersists
-    * the round's intermediate once both have been checkpointed. */
-  case class RoundResult(decisions: org.apache.spark.sql.Dataset[DecisionRow],
-                         lineage: Seq[LineageRow],
-                         scored: DataFrame, release: () => Unit)
+  /** Read schema of a scored-pairs table: passing it skips the schema
+    * inference job a bare `spark.read.parquet` runs. */
+  private val ScoredPairSchema = org.apache.spark.sql.types.StructType(
+    LocalParquet.schemaOf[ScoredPair]().map(_.copy(nullable = true)))
+
+  /** Local property naming the `run` phase (candidates, decide, commit,
+    * checkpoint, ...) that started a Spark job; listeners read it from
+    * the job's properties. */
+  val StageProperty = "graft.stage"
+
+  /** Row bound of the driver-side decide paths. A round with
+    * `maxCandidatesPerRound` ≤ this is round-sized: [[decideRound]] brings
+    * its decisions, lineage and fresh scored pairs to the driver in one
+    * action ([[LocalRound]]). A larger round keeps them distributed and
+    * collects its decisions only when there are at most this many. */
+  val DriverRows = 100000
+
+  /** The decide stage's output for one round; `release` frees what it
+    * cached once the round has been checkpointed. */
+  sealed trait RoundResult {
+    def lineage: Seq[LineageRow]
+    def release(): Unit = ()
+  }
+
+  /** A round-sized round, collected by one action: decisions label-sorted
+    * (the commit order), fresh scored pairs unique on (subLabel, supLabel). */
+  final case class LocalRound(decisions: Array[DecisionRow], lineage: Seq[LineageRow],
+                              scored: Seq[ScoredPair]) extends RoundResult
+
+  /** A round above [[DriverRows]] candidates: `decisions` and `scored` are
+    * distributed datasets that never transit the driver whole — run()
+    * spills decisions to the round's parquet and streams the commit from a
+    * sorted local iterator; `releaseCache` unpersists the round's
+    * intermediate once both have been checkpointed. */
+  final case class DistributedRound(decisions: org.apache.spark.sql.Dataset[DecisionRow],
+                                    lineage: Seq[LineageRow], scored: DataFrame,
+                                    releaseCache: () => Unit) extends RoundResult {
+    override def release(): Unit = releaseCache()
+  }
 
   /** Per-round slice of the scored-pairs history relevant to this
     * candidate batch: pairs whose sub OR sup label is a candidate mention.
@@ -293,7 +344,11 @@ object KgPipeline {
   /** Stage 3: link + decide, executor-side against the broadcast snapshot.
     * `candidates` must carry the per-mention `priors` column
     * ([[candidatesWithPriors]]) — pass a null/absent slice as an empty
-    * array, never the full history. */
+    * array, never the full history. One task per candidate partition
+    * returns its decisions, one lineage row and the pairs it scored fresh.
+    * A round-sized round (`cfg.maxCandidatesPerRound` ≤ [[DriverRows]])
+    * collects that output in ONE action; larger rounds cache it and leave
+    * decisions and pairs distributed. */
   def decideRound(spark: SparkSession, candidates: DataFrame, taxo: MutableTaxo,
                   models: IconModels, cfg: PipelineConfig, round: Int,
                   embCache: graft.retrieve.SnapshotEmbeddings = null,
@@ -482,19 +537,30 @@ object KgPipeline {
         // — O(delta) end to end where the anti-join read was O(history)
         val scored = cache.exportFresh.map { case (a, b, p) => ScoredPair(a, b, p) }
         Iterator((decisions, Seq(lineage), scored))
-      }.persist()
+      }
 
-    // scored pairs AND decisions stay distributed (run() spills decisions
-    // to the round's parquet and streams the deterministic commit from a
-    // sorted local iterator — driver memory is bounded by one partition,
-    // not the candidate count); lineage is one row per task, so collecting
-    // it is safe at any scale.
-    val scoredDF = raw.flatMap(_._3).toDF("subLabel", "supLabel", "p")
-      .groupBy("subLabel", "supLabel").agg(first("p").as("p"))
-    val decisionsDS = raw.flatMap(_._1.iterator)
-    val lineageRows = raw.flatMap(_._2.iterator).collect().toSeq :+ indexLineage
-    RoundResult(decisionsDS, lineageRows, scoredDF,
-      () => { raw.unpersist(); seedRelease() })
+    if (cfg.maxCandidatesPerRound <= DriverRows) {
+      // round-sized: one action, no cache, no scored-pairs shuffle. A
+      // fresh pair has its candidate on one side, so no two tasks export
+      // the same pair; the dedupe keeps the store rows identical even if
+      // that ever changed.
+      val parts = try raw.collect() finally seedRelease()
+      LocalRound(parts.flatMap(_._1).sortBy(_.label),
+        parts.iterator.flatMap(_._2).toSeq :+ indexLineage,
+        parts.iterator.flatMap(_._3).distinctBy(p => (p.subLabel, p.supLabel)).toVector)
+    } else {
+      // scored pairs AND decisions stay distributed (run() spills decisions
+      // to the round's parquet and streams the deterministic commit from a
+      // sorted local iterator — driver memory is bounded by one partition,
+      // not the candidate count); lineage is one row per task, so
+      // collecting it is safe at any scale.
+      val cached = raw.persist()
+      val scoredDF = cached.flatMap(_._3).toDF("subLabel", "supLabel", "p")
+        .groupBy("subLabel", "supLabel").agg(first("p").as("p"))
+      val lineageRows = cached.flatMap(_._2.iterator).collect().toSeq :+ indexLineage
+      DistributedRound(cached.flatMap(_._1.iterator), lineageRows, scoredDF,
+        () => { cached.unpersist(); seedRelease() })
+    }
   }
 
   /** Commit result: next id-allocator value, inserted-edge provenance
@@ -744,25 +810,38 @@ object KgPipeline {
     GraphOps.unionFindMinId(pairs)
 
   private def canonicalizeLocal(ids: Array[Long], emb: Array[Array[Float]],
-                                threshold: Double): Map[Long, Long] = {
+                                threshold: Double): Map[Long, Long] =
+    // one union-find implementation in this file: min-id roots are
+    // identical with or without path compression, so reusing the
+    // compressed twin changes nothing but keeps the two paths from
+    // silently diverging
+    unionFindMinId(nearDupPairsLocal(emb, threshold).map { case (i, j) => (ids(i), ids(j)) })
+
+  /** Index pairs (i < j) whose cosine, rounded HALF_UP to 6 places, is ≥
+    * `threshold` (a zero vector has cosine 0). Each norm is computed once,
+    * and only raw cosines ≥ threshold − 1e-6 are rounded: rounding moves a
+    * value by at most 0.5e-6, so a lower one cannot reach the threshold. */
+  private[graft] def nearDupPairsLocal(emb: Array[Array[Float]],
+                                       threshold: Double): Array[(Int, Int)] = {
     def dot(a: Array[Float], b: Array[Float]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
       s
     }
-    def norm(a: Array[Float]) = math.sqrt(dot(a, a))
-    val pairs = mutable.ArrayBuffer.empty[(Long, Long)]
-    for (i <- ids.indices; j <- (i + 1) until ids.length) {
-      val d = norm(emb(i)) * norm(emb(j))
-      val cos = if (d == 0) 0.0 else
-        BigDecimal(dot(emb(i), emb(j)) / d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      if (cos >= threshold) pairs += ((ids(i), ids(j)))
+    val norms = emb.map(v => math.sqrt(dot(v, v)))
+    val pairs = mutable.ArrayBuffer.empty[(Int, Int)]
+    for (i <- emb.indices; j <- (i + 1) until emb.length) {
+      val d = norms(i) * norms(j)
+      val near =
+        if (d == 0) 0.0 >= threshold
+        else {
+          val raw = dot(emb(i), emb(j)) / d
+          raw >= threshold - 1e-6 &&
+            BigDecimal(raw).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble >= threshold
+        }
+      if (near) pairs += ((i, j))
     }
-    // one union-find implementation in this file: min-id roots are
-    // identical with or without path compression, so reusing the
-    // compressed twin changes nothing but keeps the two paths from
-    // silently diverging
-    unionFindMinId(pairs.toArray)
+    pairs.toArray
   }
 
   /** Returns the edges actually added while re-pointing (for the round's
@@ -914,7 +993,7 @@ object KgPipeline {
       ((baseRound + 1) to resumeRound).foldLeft(base) { (acc, i) =>
         val rd = roundDir(ckptDir, i)
         if (Files.exists(Paths.get(s"$rd/scored_pairs_delta")))
-          acc.union(spark.read.parquet(s"$rd/scored_pairs_delta"))
+          acc.union(spark.read.schema(ScoredPairSchema).parquet(s"$rd/scored_pairs_delta"))
         else if (Files.exists(Paths.get(s"$rd/scored_pairs")))
           spark.read.parquet(s"$rd/scored_pairs") // pre-delta format: per-round FULL store
         else acc // round minted no pairs delta (legal on empty rounds)
@@ -969,9 +1048,12 @@ object KgPipeline {
       .persist()
 
     val phase = mutable.LinkedHashMap.empty[String, Double]
+    val sc = spark.sparkContext
     def timed[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
-      val out = f
+      val outer = sc.getLocalProperty(StageProperty)
+      sc.setLocalProperty(StageProperty, name)
+      val out = try f finally sc.setLocalProperty(StageProperty, outer)
       phase(name) = phase.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
       out
     }
@@ -1054,26 +1136,28 @@ object KgPipeline {
           candLabels = fresh.select(col("mention"))))
       allLineage ++= result.lineage
 
-      // adaptive commit source (the §4.5 driver/distributed pattern): the
-      // decision count is already known from the collected per-task lineage
-      // rows, so round-sized batches are collected directly — the parquet
-      // spill costs ~4 extra jobs per round, a measurable serial term on a
-      // 16-core 26 s pipeline wall — while big rounds spill to the round's
-      // parquet and STREAM the commit from a sorted local iterator (driver
-      // memory = one partition, regardless of maxCandidatesPerRound; the
-      // 10⁶-candidate drive exercises this path, BENCH/BASELINE.md §9b).
-      // Both paths feed identical label-sorted iterators to commitStream.
+      // commit source (the §4.5 driver/distributed pattern): a round-sized
+      // round arrives collected and label-sorted. Above DriverRows
+      // candidates the decision count is known from the collected per-task
+      // lineage rows: few decisions are still collected directly, while
+      // big rounds spill to the round's parquet and STREAM the commit from
+      // a sorted local iterator (driver memory = one partition, regardless
+      // of maxCandidatesPerRound; the 10⁶-candidate drive exercises this
+      // path, BENCH/BASELINE.md §9b). Every path feeds identical
+      // label-sorted iterators to commitStream.
       val rd = roundDir(ckptDir, r)
-      val nDecisions = result.lineage.iterator
-        .filter(_.stage == "decide").map(_.rowsOut).sum
-      val decisionsSorted: () => Iterator[DecisionRow] = timed("decide") {
-        if (nDecisions <= 100000) {
-          val sorted = result.decisions.collect().sortBy(_.label)
-          () => sorted.iterator
-        } else {
-          result.decisions.write.mode(SaveMode.Overwrite).parquet(s"$rd/decisions")
-          val ds = spark.read.parquet(s"$rd/decisions").as[DecisionRow].orderBy("label")
-          () => ds.toLocalIterator().asScala
+      val decisionsSorted: () => Iterator[DecisionRow] = result match {
+        case l: LocalRound => () => l.decisions.iterator
+        case d: DistributedRound => timed("decide") {
+          val nDecisions = d.lineage.iterator.filter(_.stage == "decide").map(_.rowsOut).sum
+          if (nDecisions <= DriverRows) {
+            val sorted = d.decisions.collect().sortBy(_.label)
+            () => sorted.iterator
+          } else {
+            d.decisions.write.mode(SaveMode.Overwrite).parquet(s"$rd/decisions")
+            val ds = spark.read.parquet(s"$rd/decisions").as[DecisionRow].orderBy("label")
+            () => ds.toLocalIterator().asScala
+          }
         }
       }
       // eqv pairs are captured while the commit stream drains (they are a
@@ -1121,9 +1205,7 @@ object KgPipeline {
       // nodes + surviving added edges — merges only remove same-round
       // mints), with a full snapshot every cfg.compactEvery rounds; the
       // per-round write cost tracks the delta, not the snapshot. The scored
-      // store follows the same scheme distributed-side: per-round fresh-
-      // pair deltas (anti-joined against the store, written straight from
-      // the executors — the history never transits the driver) with a
+      // store follows the same scheme: per-round fresh-pair deltas with a
       // full-store rewrite on compaction rounds, which also resets the
       // live union chain so plans don't grow unboundedly.
       timed("checkpoint") {
@@ -1138,27 +1220,15 @@ object KgPipeline {
           .toSeq.distinct
           .filter { case (u, v) => taxo.containsEdge(u, v) }
           .map { case (u, v) => (u, v, taxo.succ(u)(v)) }
-        // adaptive file layout: one file for round-sized deltas, natural
-        // parallelism for mint-heavy rounds (a 2M-row coalesce(1) is a
-        // single-task serial write — the §9b drive's delta IS the
-        // snapshot). Every row carries its insertion index (`seq`): the
-        // resume replay sorts on it, reconstructing the live run's exact
-        // LinkedHashMap insertion order (MutableTaxo documents insertion
-        // order as decision-relevant) even across repartitioned writes.
-        def writeAdaptive(df: DataFrame, n: Long, path: String): Unit =
-          (if (n <= 100000) df.coalesce(1) else df)
-            .write.mode(SaveMode.Overwrite).parquet(path)
-        // the round's checkpoint tables are INDEPENDENT writes gated by one
-        // COMMIT marker written last — so submit them from a driver thread
-        // pool and await all before the marker (optimization guide §2.6:
+        // Spark writes (compaction snapshots, a distributed round's scored
+        // pairs, the embedding store) are INDEPENDENT jobs gated by the one COMMIT
+        // marker written last, so they are submitted from a driver thread
+        // pool and awaited before the marker (optimization guide §2.6:
         // actions are only sequential because the driver calls them
-        // sequentially). Serially, the 6+ small writes were the measured
-        // bulk of the checkpoint phase (job-launch + committer latency per
-        // write, ~0.3 s each at round-sized deltas); atomicity is unchanged
-        // because a failure in ANY write propagates out of the awaits and
-        // the marker is never written.
-        // daemon workers: an exception escaping before the shutdown below
-        // must not leave non-daemon pool threads pinning the JVM open
+        // sequentially); a failure in ANY write propagates out of the
+        // awaits and the marker is never written. Daemon workers: an
+        // exception escaping before the shutdown below must not leave
+        // non-daemon pool threads pinning the JVM open.
         val ckptPool = java.util.concurrent.Executors.newFixedThreadPool(8,
           (r: Runnable) => { val t = new Thread(r, "ckpt-write"); t.setDaemon(true); t })
         implicit val ckptEc: scala.concurrent.ExecutionContext =
@@ -1169,14 +1239,6 @@ object KgPipeline {
           try pendingWrites.foreach(f =>
             scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
           finally { pendingWrites.clear() }
-        pendingWrites += bg(writeAdaptive(
-          nodeAdds.zipWithIndex.map { case ((l, id), k) => (k.toLong, id, l) }
-            .toDF("seq", "id", "label"),
-          nodeAdds.size, s"$rd/nodes_delta"))
-        pendingWrites += bg(writeAdaptive(
-          edgeAdds.zipWithIndex.map { case ((u, v, l), k) => (k.toLong, u, v, l) }
-            .toDF("seq", "src", "dst", "label"),
-          edgeAdds.size, s"$rd/edges_delta"))
         val compact = cfg.compactEvery > 0 && r % cfg.compactEvery == 0
         if (compact) {
           // compaction: partitioned full-snapshot write (the old per-round
@@ -1194,19 +1256,21 @@ object KgPipeline {
         }
         // scored-pairs store: fresh pairs only per round. decide exports
         // ONLY pairs it scored this round (ScoreCache.exportFresh — pairs
-        // imported from the prior slice are excluded executor-side), so
-        // result.scored IS the history-fresh delta and the store write is
+        // imported from the prior slice are excluded executor-side), so the
+        // round's pairs ARE the history-fresh delta and the store write is
         // O(delta) with no shuffle of the history at all. (The r4 form
-        // anti-joined result.scored against the full store here — an
-        // O(history) shuffle every round, 64.9 s of the §9g drive's
-        // checkpoint wall.)
-        val freshPairs = result.scored
-        if (compact) {
-          pendingWrites += bg(scoredStore.union(freshPairs)
-            .write.mode(SaveMode.Overwrite).parquet(s"$rd/scored_pairs"))
-        } else {
-          pendingWrites += bg(
-            freshPairs.write.mode(SaveMode.Overwrite).parquet(s"$rd/scored_pairs_delta"))
+        // anti-joined them against the full store here — an O(history)
+        // shuffle every round, 64.9 s of the §9g drive's checkpoint wall.)
+        val pairsTable = if (compact) "scored_pairs" else "scored_pairs_delta"
+        result match {
+          case l: LocalRound if !compact => LocalParquet.writeRows(s"$rd/$pairsTable", l.scored)
+          case _ =>
+            val fresh = result match {
+              case l: LocalRound => l.scored.toDF()
+              case d: DistributedRound => d.scored
+            }
+            pendingWrites += bg((if (compact) scoredStore.union(fresh) else fresh)
+              .write.mode(SaveMode.Overwrite).parquet(s"$rd/$pairsTable"))
         }
         // embedding store (at-scale decide path): this round's merge
         // SURVIVORS are the per-round delta; a full store snapshot is
@@ -1219,26 +1283,43 @@ object KgPipeline {
             pendingWrites += bg(embStore.union(survivors)
               .write.mode(SaveMode.Overwrite).parquet(s"$rd/embeddings"))
           } else {
-            pendingWrites += bg(writeAdaptive(survivors, nodeAdds.size, s"$rd/emb_delta"))
+            pendingWrites += bg((if (nodeAdds.size <= DriverRows) survivors.coalesce(1)
+              else survivors).write.mode(SaveMode.Overwrite).parquet(s"$rd/emb_delta"))
           }
         }
-        pendingWrites += bg((result.lineage ++ canonRes.lineage).toDF()
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$rd/lineage"))
-        // cumulative provenance (bounded by inserted edges — adaptive too:
-        // at the §9b drive it reaches 2M rows): lets a resumed run
-        // reconstruct src_round exactly
-        pendingWrites += bg(writeAdaptive(allDeltas.toSeq.toDF("src", "dst", "label", "round"),
-          allDeltas.size, s"$rd/deltas"))
-        pendingWrites += bg(writeAdaptive(sameAs.toSeq.toDF("a", "b", "round"),
-          sameAs.size, s"$rd/sameas"))
-        // barrier: every table durable before any state swap or the marker
-        try awaitWrites() finally ckptPool.shutdown()
+        // every taxonomy row carries its insertion index (`seq`): the
+        // resume replay sorts on it, reconstructing the live run's exact
+        // LinkedHashMap insertion order (MutableTaxo documents insertion
+        // order as decision-relevant) even across repartitioned writes.
+        // These tables are built on the driver, so the driver writes them
+        // at any size, with no Spark job: a Spark write of a local Seq
+        // copies it into a LocalRelation and pays job launch + output
+        // committer per table. 2M-row edge table, local[4]: Spark's write
+        // 6.8-14.3 s, this one 0.6-1.6 s; the resume replay's read of the
+        // single file is 1.1-1.4 s against 0.6-2.2 s for Spark's 4 files.
+        try {
+          LocalParquet.writeRows(s"$rd/nodes_delta",
+            nodeAdds.zipWithIndex.map { case ((l, id), k) => (k.toLong, id, l) },
+            "seq", "id", "label")
+          LocalParquet.writeRows(s"$rd/edges_delta",
+            edgeAdds.zipWithIndex.map { case ((u, v, l), k) => (k.toLong, u, v, l) },
+            "seq", "src", "dst", "label")
+          LocalParquet.writeRows(s"$rd/lineage", result.lineage ++ canonRes.lineage)
+          // cumulative provenance (bounded by inserted edges — at the §9b
+          // drive it reaches 2M rows): lets a resumed run reconstruct
+          // src_round exactly
+          LocalParquet.writeRows(s"$rd/deltas", allDeltas.toSeq, "src", "dst", "label", "round")
+          LocalParquet.writeRows(s"$rd/sameas", sameAs.toSeq, "a", "b", "round")
+          // barrier: every table durable before any state swap or the marker
+          awaitWrites()
+        } finally ckptPool.shutdown()
         // post-write state swaps + cache releases (read-back depends on the
-        // completed writes; release order matches the old serial flow)
+        // completed writes)
         result.release()
         scoredStore =
           if (compact) spark.read.parquet(s"$rd/scored_pairs")
-          else scoredStore.union(spark.read.parquet(s"$rd/scored_pairs_delta"))
+          else scoredStore.union(
+            spark.read.schema(ScoredPairSchema).parquet(s"$rd/scored_pairs_delta"))
         if (embStore != null) {
           val prev = embStore
           canonRes.release()
@@ -1389,8 +1470,10 @@ object KgPipeline {
       .map { case (u, v, _) => (taxo.getLabel(u), "isA", taxo.getLabel(v),
         cfg.rounds + 1, "moved") }
     val same = sameAs.map { case (a, b, rr) => (a, "sameAs", b, rr, "eqv") }.toSeq
-    val triples = (isA ++ movedT ++ same).toDF("subj", "pred", "obj", "src_round", "lineage")
-    triples.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$ckptDir/triples")
+    val tripleCols = Seq("subj", "pred", "obj", "src_round", "lineage")
+    val tripleRows = isA ++ movedT ++ same
+    LocalParquet.writeRows(s"$ckptDir/triples", tripleRows, tripleCols: _*)
+    val triples = tripleRows.toDF(tripleCols: _*)
     val lineageDF = allLineage.toSeq.toDF()
     RunResult(taxo, triples, lineageDF, cfg.rounds - resumeRound)
   }

@@ -520,4 +520,96 @@ class PipelineSpec extends SparkSpecBase {
     val t = res.taxo
     for (n <- t.nodes) assert(!t.getAncestors(n).contains(n), s"cycle at $n")
   }
+
+  test("round-sized and distributed decide rounds write the same checkpoint and triples") {
+    import spark.implicits._
+    // every candidate of this corpus fits either bound, so the two configs
+    // admit the same candidates: one collects the round (LocalRound), the
+    // other caches it and shuffles the scored pairs (DistributedRound)
+    val local = Files.createTempDirectory("kgreg_local").toString
+    val dist = Files.createTempDirectory("kgreg_dist").toString
+    def go(maxCands: Int, dir: String) = KgPipeline.run(spark, corpus(300, 4), "text",
+      KgPipeline.domainModels(), cfg(2).copy(maxCandidatesPerRound = maxCands), dir)
+    val rLocal = go(KgPipeline.DriverRows, local)
+    val rDist = go(KgPipeline.DriverRows + 1, dist)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(rLocal.triples) == rows(rDist.triples))
+    assert(rows(rLocal.triples).nonEmpty)
+    for (r <- 1 to 2; t <- Seq("nodes_delta", "edges_delta", "scored_pairs_delta", "deltas",
+                               "sameas")) {
+      val a = spark.read.parquet(s"$local/round=$r/$t")
+      val b = spark.read.parquet(s"$dist/round=$r/$t")
+      assert(a.schema == b.schema, s"round $r $t schema")
+      assert(rows(a) == rows(b), s"round $r $t rows")
+    }
+    assert(spark.read.parquet(s"$local/round=1/scored_pairs_delta").count() > 0)
+    assert(rows(spark.read.parquet(s"$local/triples")) == rows(rLocal.triples))
+    // the decide tasks' lineage rows match apart from their wall times
+    def decideLineage(res: KgPipeline.RunResult) =
+      res.lineage.filter($"stage" === "decide").drop("wallMs").collect()
+        .map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(decideLineage(rLocal) == decideLineage(rDist))
+  }
+
+  test("a round-sized round's checkpoint phase starts no Spark job") {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        stages.add(String.valueOf(e.properties.getProperty(KgPipeline.StageProperty)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val ckpt = Files.createTempDirectory("kgjobs").toString
+      KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(), cfg(1), ckpt)
+      // listener events arrive asynchronously and in order: once a
+      // marker job's start is seen, every pipeline job's has been too
+      spark.sparkContext.setLocalProperty(KgPipeline.StageProperty, "marker")
+      try spark.range(1).count()
+      finally spark.sparkContext.setLocalProperty(KgPipeline.StageProperty, null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!stages.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(stages.contains("marker"), "listener saw no marker job")
+      val seen = stages.toArray.toSeq
+      assert(seen.contains("decide"), s"phases seen: $seen")
+      assert(!seen.contains("checkpoint"), s"phases seen: $seen")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("near-dup pair kernel equals the round-every-pair form") {
+    // the form the kernel replaced: both norms per pair, every cosine
+    // rounded HALF_UP to 6 places before the threshold test
+    def reference(emb: Array[Array[Float]], threshold: Double): Set[(Int, Int)] = {
+      def dot(a: Array[Float], b: Array[Float]) =
+        a.indices.foldLeft(0.0)((s, i) => s + a(i).toDouble * b(i).toDouble)
+      def norm(a: Array[Float]) = math.sqrt(dot(a, a))
+      (for (i <- emb.indices; j <- (i + 1) until emb.length) yield {
+        val d = norm(emb(i)) * norm(emb(j))
+        val cos = if (d == 0) 0.0 else BigDecimal(dot(emb(i), emb(j)) / d)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        if (cos >= threshold) Some((i, j)) else None
+      }).flatten.toSet
+    }
+    val rnd = new scala.util.Random(7)
+    def unit(v: Array[Double]) = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
+    // random vectors, near-duplicates among them and a zero vector
+    val base = Array.fill(60)(Array.fill(16)(rnd.nextGaussian().toFloat))
+    val random = base ++ base.take(20).map(_.map(x => x + 0.05f * rnd.nextGaussian().toFloat)) :+
+      new Array[Float](16)
+    for (th <- Seq(0.98, 0.5, 0.0))
+      assert(KgPipeline.nearDupPairsLocal(random, th).toSet == reference(random, th), s"th=$th")
+    // vectors at and within 1e-6 of cosine 0.98 to the first one: u and
+    // w orthonormal, v = c·u + sqrt(1 − c²)·w for c around 0.98
+    val dim = 32
+    val u = unit(Array.fill(dim)(rnd.nextGaussian()))
+    val w0 = Array.fill(dim)(rnd.nextGaussian())
+    val w = unit(w0.indices.map(i => w0(i) - u.indices.map(k => u(k) * w0(k)).sum * u(i)).toArray)
+    val cs = (-25 to 25).map(k => 0.98 + k * 1e-7) ++ Seq(0.9799995, 0.979999, 0.9799985)
+    val boundary = u.map(_.toFloat) +: cs.map(c =>
+      u.indices.map(i => (c * u(i) + math.sqrt(1 - c * c) * w(i)).toFloat).toArray).toArray
+    val got = KgPipeline.nearDupPairsLocal(boundary, 0.98).toSet
+    assert(got == reference(boundary, 0.98))
+    val withFirst = got.count(_._1 == 0)
+    assert(withFirst > 0 && withFirst < cs.size, s"$withFirst of ${cs.size} pairs with u kept")
+  }
 }

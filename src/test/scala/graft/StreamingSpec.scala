@@ -18,7 +18,7 @@ class StreamingSpec extends SparkSpecBase {
     web.write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val q = StreamingOps.streamingMentions(spark, dir, schema, "mentions_test")
-    q.awaitTermination(120000)
+    assert(q.awaitTermination(120000), "stream did not drain")
     val streamed = spark.sql("SELECT mention, count FROM mentions_test")
       .as[(String, Long)].collect().toMap
     val batch = KgPipeline.extractMentions(web, "text", 1L)
@@ -39,7 +39,7 @@ class StreamingSpec extends SparkSpecBase {
     val schema = spark.read.parquet(dir).schema
     val q = StreamingOps.streamingMentionsAppend(spark, dir, schema,
       sentinelDir, spark.read.parquet(sentinelDir).schema, "mentions_append_test")
-    q.awaitTermination(120000)
+    assert(q.awaitTermination(120000), "stream did not drain")
     val streamed = spark.sql("SELECT mention, freq FROM mentions_append_test")
       .as[(String, Long)].collect().toMap
     val batch = KgPipeline.extractMentions(web, "text", 1L)
@@ -63,7 +63,7 @@ class StreamingSpec extends SparkSpecBase {
     val schema = spark.read.parquet(dir).schema
     val q = StreamingOps.streamingMentionsAppendOneDir(spark, dir, schema,
       "mentions_onedir_test")
-    q.awaitTermination(120000)
+    assert(q.awaitTermination(120000), "stream did not drain")
     val streamed = spark.sql("SELECT mention, freq FROM mentions_onedir_test")
       .as[(String, Long)].collect().toMap
     val batch = KgPipeline.extractMentions(web, "text", 1L)
@@ -86,7 +86,7 @@ class StreamingSpec extends SparkSpecBase {
     def drain(): Unit = {
       val q = StreamingOps.streamingMentionsToParquet(spark, docsDir, docsSchema,
         sentinelDir, sentinelSchema, outDir, ckptDir)
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "stream did not drain")
     }
     // three incremental arrival batches, the query RESTARTED (same
     // checkpoint) between each — file-source offsets, watermark, and agg
@@ -137,7 +137,7 @@ class StreamingSpec extends SparkSpecBase {
     events.union(sentinel).coalesce(1).write.mode("overwrite").parquet(dir)
     val q = StreamingOps.streamingSessions(spark, dir,
       spark.read.parquet(dir).schema, "sess_stream_test")
-    q.awaitTermination(120000)
+    assert(q.awaitTermination(120000), "stream did not drain")
     val streamed = spark.table("sess_stream_test")
       .filter(col("user_id") >= 0)
       .select("user_id", "session_seq", "n_events", "session_start", "session_end")
@@ -166,7 +166,7 @@ class StreamingSpec extends SparkSpecBase {
     def drain(): Unit = {
       val q = StreamingOps.streamingSessionsToParquet(spark, inDir,
         events.schema, outDir, ckpt)
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "stream did not drain")
     }
     events.filter(col("ts") < lit(cut)).coalesce(1).write.mode("append").parquet(inDir)
     drain()
@@ -208,7 +208,7 @@ class StreamingSpec extends SparkSpecBase {
     def drain(): Unit = {
       val q = StreamingOps.streamingSessionsToParquet(spark, inDir, schema, outDir, ckpt,
         gapMinutes = 30, tombstoneTtlMicros = dayMicros)
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "stream did not drain")
     }
     drain()
     write(Seq((-1L, at(2), -1L))) // watermark past gap: session 1 closes, tombstone set
@@ -233,7 +233,7 @@ class StreamingSpec extends SparkSpecBase {
       .write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val q = StreamingOps.streamingEventAgg(spark, dir, schema, "eventagg_test")
-    q.awaitTermination(120000)
+    assert(q.awaitTermination(120000), "stream did not drain")
     // append-mode with watermark emits only closed windows; on a finite
     // batch the final window stays open — check the intermediate state too
     val n = spark.sql("SELECT count(*) FROM eventagg_test").head.getLong(0)
