@@ -12,6 +12,8 @@ package graft.extract
   *   - <...> tags become a space; a '<' with no closing '>' is literal text
   *   - &amp; &lt; &gt; &quot; &#39; &apos; decoded; &nbsp; and &#NNN; → space
   *   - whitespace runs collapse to one space; result trimmed
+  * MentionScanner's byte loop applies the same markup rules to all-ASCII
+  * pages without decoding them; ExtractSpec checks the two agree.
   */
 object HtmlScanner {
 

@@ -178,64 +178,63 @@ object KgPipeline {
       .filter(col("freq") >= minFreq)
 
   /** Fused variant over raw html: extract → tokenize → bigrams → COUNT, all
-    * inside one partition-local pass (extract streams characters straight
-    * into the tokenizer, occurrences accumulate in a per-partition hash
-    * map). Measured at 8M pages / 16 cores: the corpus yields 6.7·10⁸
-    * mention occurrences, and materializing them as rows through
-    * generate + hash-aggregate cost ~12 s on top of the ~11 s scan+scan
-    * work — the per-partition imperative form (the documented last-resort,
-    * justified here by measurement) skips the 668M-row operator traffic;
-    * only per-partition distinct mentions (bounded by vocabulary) reach
-    * the final groupBy. */
+    * inside one partition-local pass (occurrences accumulate in a
+    * per-partition hash map). Measured at 8M pages / 16 cores: the corpus
+    * yields 6.7·10⁸ mention occurrences, and materializing them as rows
+    * through generate + hash-aggregate cost ~12 s on top of the ~11 s
+    * scan work — the per-partition imperative form (the documented
+    * last-resort, justified here by measurement) skips the 668M-row
+    * operator traffic; only per-partition distinct mentions (bounded by
+    * vocabulary) reach the final groupBy.
+    *
+    * The html column is read as UTF-8 bytes, and each page takes one of two
+    * paths ([[MentionScanner.PageScan]]): a page whose bytes are all < 0x80
+    * is counted by a byte loop that tokenizes the raw bytes in place; any
+    * other page is decoded and takes the char path (HtmlScanner +
+    * CountingSink). The char path stays because non-ASCII chars can
+    * lowercase to ASCII — U+0130 'İ' → 'i', U+212A KELVIN SIGN → 'k', so
+    * `<scrİpt>` opens a script block — and the full-string lowercase the
+    * column twin applies can expand one char into several. Both paths
+    * count into one per-partition state. */
   def extractMentionsFromHtml(corpus: DataFrame, htmlCol: String, minFreq: Long,
                               maxStateEntries: Int = 1 << 22): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    corpus.select(col(htmlCol).cast("string")).as[String]
+    corpus.select(col(htmlCol).cast("binary")).as[Array[Byte]]
       .mapPartitions { it =>
         // Unlike the hash-aggregate plan this replaces, the per-partition
         // counter can't spill — so it's capped: once the chunk's distinct
         // bigrams OR interned tokens reach maxStateEntries (default 4M ≈
         // ~150 MB incl. the dict) the partial counts flush as rows and the
         // state resets; the downstream sum-groupBy merges partials exactly.
-        // The cap holds INSIDE a document too: the html scan is resumable
-        // (HtmlScanner.ScanState cursor), so on mid-document overflow the
-        // scan PAUSES, this iterator streams the partial counts out, and
-        // the scan continues from the same position — peak state is the
-        // cap, never a pathological page's distinct-bigram count. Real web
-        // text (unbounded bigram cardinality) stays memory-safe; the flush
-        // never fires on vocabulary-bounded corpora.
+        // The cap holds INSIDE a document too: a page scan is resumable,
+        // so on mid-document overflow the scan PAUSES, this iterator
+        // streams the partial counts out, and the scan continues from the
+        // same position — peak state is the cap, never a pathological
+        // page's distinct-bigram count. Real web text (unbounded bigram
+        // cardinality) stays memory-safe; the flush never fires on
+        // vocabulary-bounded corpora.
         new Iterator[(String, Long)] {
-          import graft.extract.{HtmlScanner, MentionScanner}
+          import graft.extract.MentionScanner
           private var inner: Iterator[(String, Long)] = Iterator.empty
-          private var state = new MentionScanner.MentionCounts()
-          private var html: String = null
-          private var scan: HtmlScanner.ScanState = null
-          private var sink: MentionScanner.CountingSink = null
+          private val state = new MentionScanner.MentionCounts()
+          private var page: MentionScanner.PageScan = null
           private var finalDrained = false
-          private def over =
-            state.bigrams.size >= maxStateEntries || state.dict.size >= maxStateEntries
           private def refill(): Unit = {
             while (!inner.hasNext && !finalDrained) {
-              if (html != null) {
-                // continue the in-flight document until done or next pause
-                val paused = HtmlScanner.extractResumable(html, sink, scan,
-                  () => sink.overflowed)
-                if (paused) {
+              if (page != null) {
+                // continue the in-flight page until done or next pause
+                if (page.resume()) {
                   inner = state.iterator // materialized before the reset
-                  sink.drainReset()
+                  page.drainReset()
                 } else {
-                  sink.finish()
-                  html = null; scan = null; sink = null
-                  if (over) { inner = state.iterator; state.reset() }
+                  page = null
+                  if (state.full(maxStateEntries)) { inner = state.iterator; state.reset() }
                 }
               } else if (it.hasNext) {
                 val h = it.next()
-                if (h != null && h.nonEmpty) {
-                  html = h
-                  scan = new HtmlScanner.ScanState
-                  sink = new MentionScanner.CountingSink(state, maxStateEntries)
-                }
+                if (h != null && h.nonEmpty)
+                  page = MentionScanner.PageScan(h, state, maxStateEntries)
               } else {
                 finalDrained = true
                 inner = state.iterator
