@@ -6,6 +6,7 @@ import graft.models.{CommonTokenGenerator, HashNgramEmbedder, IconModels, TokenC
 import graft.retrieve.VectorIndex
 import graft.spark.GraphOps
 import graft.taxo.{CycleException, MutableTaxo}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,15 +22,22 @@ import scala.jdk.CollectionConverters._
   *   1. EXTRACT — per-partition mention detection over the corpus (codegen'd
   *      column ops, no UDF): bigram candidates + frequencies.
   *   2. DEDUPE — anti-join mention tokenset-hashes against the taxonomy's
-  *      lexical table and the scored-history (the reference's lexical cache
-  *      P1 / sub-score cache M4, as distributed joins).
-  *   3. LINK + DECIDE — `mapPartitions` over candidate labels: each task
-  *      embeds its batch, kNN-retrieves bases from the broadcast index
-  *      (ICON manual mode with auto_bases, icon.py:515-556), and runs the
-  *      enhanced traversal (P3) with executor-local batched scoring. A
-  *      round-sized round (≤ [[DriverRows]] candidates) returns decisions,
-  *      lineage and freshly scored pairs in one `collect`; larger rounds
-  *      keep them distributed.
+  *      lexical table (the reference's lexical cache P1), keep the top
+  *      `maxCandidatesPerRound` by frequency, and slice the scored-pairs
+  *      history down to the pairs touching a candidate (sub-score cache
+  *      M4). A round-sized round (≤ [[DriverRows]] candidates) collects
+  *      its candidates in one action and its slice in a second one,
+  *      skipped while the scored store is empty; a larger round
+  *      repartitions the candidates and joins the slice onto them.
+  *   3. LINK + DECIDE — one task per candidate batch embeds its batch,
+  *      kNN-retrieves bases from the broadcast index (ICON manual mode
+  *      with auto_bases, icon.py:515-556), and runs the enhanced traversal
+  *      (P3) with task-local batched scoring. A round-sized round runs the
+  *      tasks as one plain RDD job over the driver-held candidates and
+  *      collects decisions, lineage and freshly scored pairs
+  *      ([[decideLocal]]); larger rounds run them over the candidate
+  *      Dataset and keep decisions and pairs distributed
+  *      ([[decideRound]]).
   *   4. COMMIT — decisions, deterministically ordered, merge into the edge
   *      delta on the driver with P4 cycle screening; new ids allocated
   *      densely from max(id)+1.
@@ -63,8 +71,11 @@ object KgPipeline {
       // of driver heap after GC (~140 MB pairs, ~16 MB decisions); against
       // the 980k-node snapshot the collected round is 1.1M pairs, ~156 MB
       // of pairs and ~16 MB of decisions, from a 58 MB serialized result
-      // (spark.driver.maxResultSize defaults to 1 GB). Above the bound
-      // decisions and pairs stay distributed.
+      // (spark.driver.maxResultSize defaults to 1 GB). The round's prior
+      // slice is collected too, and is of the same order: its pairs are
+      // the ones its candidates scored in earlier rounds, so ≈11 pairs per
+      // candidate, ~1.1M pairs at the bound. Above the bound candidates,
+      // slice, decisions and pairs stay distributed.
       maxCandidatesPerRound: Int = 500,
       minMentionFreq: Long = 2L,
       icon: IconConfig = IconConfig(mode = "manual", inputConcepts = Seq("_")),
@@ -274,10 +285,12 @@ object KgPipeline {
   val StageProperty = "graft.stage"
 
   /** Row bound of the driver-side decide paths. A round with
-    * `maxCandidatesPerRound` ≤ this is round-sized: [[decideRound]] brings
-    * its decisions, lineage and fresh scored pairs to the driver in one
-    * action ([[LocalRound]]). A larger round keeps them distributed and
-    * collects its decisions only when there are at most this many. */
+    * `maxCandidatesPerRound` ≤ this is round-sized: its candidates and
+    * their prior slice are collected, and [[decideLocal]] brings its
+    * decisions, lineage and fresh scored pairs to the driver in one action
+    * ([[LocalRound]]). A larger round keeps them distributed
+    * ([[decideRound]]) and collects its decisions only when there are at
+    * most this many. */
   val DriverRows = 100000
 
   /** The decide stage's output for one round; `release` frees what it
@@ -306,10 +319,10 @@ object KgPipeline {
   /** Per-round slice of the scored-pairs history relevant to this
     * candidate batch: pairs whose sub OR sup label is a candidate mention.
     * The full history stays a parquet-backed DataFrame (it grows without
-    * bound across rounds at corpus scale). Kept as the bounded-slice
-    * building block (SURVEY.md M4); the pipeline attaches the slice
+    * bound across rounds at corpus scale). A round-sized round collects
+    * this slice ([[priorsByCandidate]]); a larger one attaches it
     * executor-side via [[candidatesWithPriors]] so it never transits the
-    * driver either. */
+    * driver. */
   def priorScoreSlice(candidates: DataFrame, scoredStore: DataFrame): DataFrame = {
     val m = broadcast(candidates.select(col("mention")))
     scoredStore.join(m, scoredStore("subLabel") === m("mention"), "left_semi")
@@ -317,7 +330,8 @@ object KgPipeline {
       .distinct()
   }
 
-  /** Attach each candidate's prior-score slice executor-side: a decide(l)
+  /** Attach each candidate's prior-score slice executor-side (rounds above
+    * [[DriverRows]] candidates): a decide(l)
     * call only ever queries pairs with l on one side (candidates are
     * anti-joined against the taxonomy lexical table, so no pair can span
     * two candidates), so grouping the history by the candidate mention it
@@ -340,22 +354,83 @@ object KgPipeline {
     candidates.join(sliced, Seq("mention"), "left_outer")
   }
 
-  /** Stage 3: link + decide, executor-side against the broadcast snapshot.
-    * `candidates` must carry the per-mention `priors` column
-    * ([[candidatesWithPriors]]) — pass a null/absent slice as an empty
-    * array, never the full history. One task per candidate partition
-    * returns its decisions, one lineage row and the pairs it scored fresh.
-    * A round-sized round (`cfg.maxCandidatesPerRound` ≤ [[DriverRows]])
-    * collects that output in ONE action; larger rounds cache it and leave
-    * decisions and pairs distributed. */
-  def decideRound(spark: SparkSession, candidates: DataFrame, taxo: MutableTaxo,
-                  models: IconModels, cfg: PipelineConfig, round: Int,
-                  embCache: graft.retrieve.SnapshotEmbeddings = null,
-                  embStore: DataFrame = null,
-                  candLabels: DataFrame = null): RoundResult = {
+  /** A round-sized round's prior slice: one [[priorScoreSlice]] collect,
+    * grouped on the driver by the candidate each pair touches (a pair with
+    * candidates on both sides goes to both, as in [[candidatesWithPriors]]).
+    * Bounded by the round's own pairs: see [[PipelineConfig]]. */
+  private def priorsByCandidate(cands: Array[String],
+                                scoredStore: DataFrame): Map[String, Seq[ScoredPair]] = {
+    import scoredStore.sparkSession.implicits._
+    val own = cands.toSet
+    val by = mutable.HashMap.empty[String, mutable.ArrayBuffer[ScoredPair]]
+    for (r <- priorScoreSlice(cands.toSeq.toDF("mention"), scoredStore)
+           .select("subLabel", "supLabel", "p").collect()) {
+      val p = ScoredPair(r.getString(0), r.getString(1), r.getDouble(2))
+      for (m <- Seq(p.subLabel, p.supLabel).distinct if own(m))
+        by.getOrElseUpdate(m, mutable.ArrayBuffer.empty) += p
+    }
+    by.view.mapValues(_.toSeq).toMap
+  }
+
+  /** What every decide task of a round reads: the broadcast snapshot,
+    * models, seed index and lexical table, and the round's settings. */
+  private final case class DecideContext(
+      round: Int, taxo: Broadcast[MutableTaxo], models: Broadcast[IconModels],
+      index: Broadcast[graft.retrieve.SeedSearch], lexical: Broadcast[Map[Long, Long]],
+      icon: IconConfig, retrieve: Int, distMode: Boolean)
+
+  /** One decide task, shared by both regimes: `batch` holds (mention,
+    * prior-slice pairs, seeds) rows — seeds only in distributed-retrieval
+    * mode, where null means none. Returns the task's decisions, its
+    * lineage row and the pairs it scored fresh. */
+  private def decideTask(ctx: DecideContext, batch: Seq[(String, Seq[ScoredPair], Seq[Long])])
+      : (Vector[DecisionRow], LineageRow, Seq[ScoredPair]) = {
+    val t0 = System.currentTimeMillis()
+    val snapshot = ctx.taxo.value
+    val m = ctx.models.value
+    val index = ctx.index.value
+    val lexical = ctx.lexical.value
+    val cache = new ScoreCache(m.sub)
+    for ((_, priors, _) <- batch; if priors != null)
+      cache.importAll(priors.iterator.map(p => (p.subLabel, p.supLabel, p.p)))
+    // candidate embeddings in ≤64-label model calls (M1 batch contract;
+    // one model invocation per row was a 64× inflation with a real
+    // encoder), then one decision per candidate against the snapshot.
+    // In distributed-retrieve mode the seeds arrived with the row and the
+    // query vector is not needed at all — the one embedding pass happened
+    // in the distributed retrieval stage.
+    val queryVecs: Iterator[Array[Float]] =
+      if (ctx.distMode) Iterator.continually(null)
+      else m.emb.embedBatched(batch.map(_._1)).iterator
+    val decisions = batch.iterator.zip(queryVecs).map {
+      case ((label, _, seeds), qv) =>
+        val base =
+          if (ctx.distMode) { if (seeds == null) Nil else seeds }
+          else index.search(qv, ctx.retrieve)._2.toSeq
+        val d = IconTraversal.decide(snapshot, label, base, cache, ctx.icon,
+          l => lexical.get(Tokenset.hash64(l)))
+        DecisionRow(d.label, d.eqv.map(_._1), d.eqv.map(_._2), d.sup, d.sub)
+    }.toVector
+    val lineage = LineageRow(ctx.round, org.apache.spark.TaskContext.getPartitionId(), "decide",
+      batch.size, decisions.size, cache.pairsScored, System.currentTimeMillis() - t0)
+    // fresh pairs only (scored this round, not imported from the prior
+    // slice): the checkpoint's scored-pairs delta is exactly this set, so
+    // the per-round store write needs NO anti-join against history —
+    // O(delta) end to end where the anti-join read was O(history)
+    (decisions, lineage, cache.exportFresh.map { case (a, b, p) => ScoredPair(a, b, p) })
+  }
+
+  /** The round's decide state, shared by both regimes: broadcasts, the
+    * search-space config and the seed source. Returns the context and
+    * either the index_build lineage row (broadcast index) or, in
+    * distributed-retrieval mode, the frozen RHP center the seeds are
+    * probed with. */
+  private def decideSetup(spark: SparkSession, taxo: MutableTaxo, models: IconModels,
+                          cfg: PipelineConfig, round: Int,
+                          embCache: graft.retrieve.SnapshotEmbeddings,
+                          embStore: DataFrame): (DecideContext, Either[Array[Double], LineageRow]) = {
     import spark.implicits._
     val sc = spark.sparkContext
-    val bTaxo = sc.broadcast(taxo)
     val bModels = sc.broadcast(models)
     // past `distributedRetrieveNodes` the seed retrieval runs as a
     // distributed banded cogroup against the checkpointed embedding store
@@ -363,17 +438,12 @@ object KgPipeline {
     // the remaining driver-resident state (graph + labels + lexical
     // table) is governed by the maxSnapshotNodes fail-fast bound
     val distMode = taxo.numberOfNodes > cfg.distributedRetrieveNodes && embStore != null
-    // the label-hash → node lexical table is built ONCE from the snapshot
-    // and shipped with the broadcast, not rebuilt in every task
-    val bLexical = sc.broadcast(
-      taxo.nodes.iterator.map(n => Tokenset.hash64(taxo.getLabel(n)) -> n).toMap)
     // past the ANN threshold the search-space build gets the fanout cap
     // too — same scale regime, same switch (BandedIndex scaladoc)
     val iconCfg =
       if (taxo.numberOfNodes > cfg.annNodeThreshold && cfg.icon.maxChildFanout == Int.MaxValue)
         cfg.icon.copy(maxChildFanout = 10000)
       else cfg.icon
-    val retrieve = cfg.retrieveSize
 
     // taxonomy embeddings for the broadcast index (snapshot-scoped, R5),
     // INCREMENTAL across rounds (R3 semantics, vector_index.py add/delete):
@@ -394,11 +464,9 @@ object KgPipeline {
     //                               signatures from the incremental cache)
     //   beyond                      distributed banded cogroup against the
     //                               checkpointed embedding store — seeds
-    //                               are joined ONTO the candidate rows and
-    //                               no vector transits the driver
-    var seedsDF: DataFrame = null
-    var seedRelease: () => Unit = () => ()
-    val (bIndex, indexLineage) =
+    //                               ride with the candidate rows and no
+    //                               vector transits the driver
+    val (index, seedSource): (graft.retrieve.SeedSearch, Either[Array[Double], LineageRow]) =
       if (!distMode) {
         val labels = nodeIds.map(taxo.getLabel)
         val vecs: Array[Array[Float]] = cache.sync(nodeIds, labels, missing =>
@@ -428,8 +496,8 @@ object KgPipeline {
         // evidence surface for the incremental index: rowsIn = snapshot
         // size, rowsOut = labels embedded this round, scoredPairs =
         // signatures built
-        (sc.broadcast(index), LineageRow(round, -1, "index_build", nodeIds.length,
-          cache.lastEmbedded, cache.lastSigned, System.currentTimeMillis() - tIdx))
+        (index, Right(LineageRow(round, -1, "index_build", nodeIds.length,
+          cache.lastEmbedded, cache.lastSigned, System.currentTimeMillis() - tIdx)))
       } else {
         // a run that GREW into this regime filled the cache during its
         // broadcast-banded rounds — from here on the store is the only
@@ -467,30 +535,111 @@ object KgPipeline {
           cache.restoreCenter(c, nodeIds.length)
           c
         }
-        // candidate embeddings: distributed, batch-64 model contract (M1).
-        // Embed from the PRE-priors-join mention list when the caller
+        (new VectorIndex(Array.empty, Array.empty), Left(center))
+      }
+    // the label-hash → node lexical table is built ONCE from the snapshot
+    // and shipped with the broadcast, not rebuilt in every task
+    val bLexical = sc.broadcast(
+      taxo.nodes.iterator.map(n => Tokenset.hash64(taxo.getLabel(n)) -> n).toMap)
+    (DecideContext(round, sc.broadcast(taxo), bModels, sc.broadcast(index), bLexical,
+      iconCfg, cfg.retrieveSize, distMode), seedSource)
+  }
+
+  /** Distributed-retrieval seeds of the mentions in `labels`: `(mention,
+    * seeds)` rows, unevaluated, and the candidate-vector table they are
+    * computed from. Candidate embeddings are distributed, through the
+    * batch-64 model contract (M1). */
+  private def retrieveSeeds(spark: SparkSession, ctx: DecideContext, labels: DataFrame,
+                            embStore: DataFrame, center: Array[Double],
+                            dim: Int): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val bModels = ctx.models
+    val candVecs = labels.select(col("mention")).as[String]
+      .mapPartitions { it =>
+        val emb = bModels.value.emb
+        it.grouped(64).flatMap(chunk => chunk.iterator.zip(emb.embed(chunk).iterator))
+      }.toDF("mention", "qvec")
+    (candVecs, graft.retrieve.DistributedBandedRetrieve.seeds(
+      spark, candVecs, embStore, center, dim, ctx.retrieve))
+  }
+
+  /** Stage 3 for a round-sized round (`cfg.maxCandidatesPerRound` ≤
+    * [[DriverRows]]): link + decide over driver-held candidates, each with
+    * its prior-slice pairs ([[priorScoreSlice]] grouped per candidate).
+    * The decide tasks run as ONE plain RDD job of
+    * min(defaultParallelism, n) tasks over `sc.parallelize`, and its
+    * `collect` brings back decisions, lineage and fresh scored pairs — no
+    * Catalyst plan, encoder or shuffle. In distributed-retrieval mode the
+    * seeds come from one collect of the banded cogroup (≤ retrieveSize ids
+    * per candidate) and ride in the same input. */
+  def decideLocal(spark: SparkSession, candidates: Seq[(String, Seq[ScoredPair])],
+                  taxo: MutableTaxo, models: IconModels, cfg: PipelineConfig, round: Int,
+                  embCache: graft.retrieve.SnapshotEmbeddings = null,
+                  embStore: DataFrame = null): LocalRound = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val t0 = System.currentTimeMillis()
+    val (ctx, seedSource) = decideSetup(spark, taxo, models, cfg, round, embCache, embStore)
+    val (seeds, indexLineage) = seedSource match {
+      case Right(lineage) => (Map.empty[String, Seq[Long]], lineage)
+      case Left(center) =>
+        val (_, sdf) = retrieveSeeds(spark, ctx, candidates.map(_._1).toDF("mention"),
+          embStore, center, models.emb.dim)
+        val s = sdf.collect().iterator.map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+        (s, LineageRow(round, -1, "retrieve_dist", taxo.numberOfNodes, s.size, 0,
+          System.currentTimeMillis() - t0))
+    }
+    val rows = candidates.iterator.map { case (m, priors) =>
+      (m, priors, seeds.getOrElse(m, Nil))
+    }.toVector
+    val parts = sc.parallelize(rows, math.min(sc.defaultParallelism, math.max(1, rows.size)))
+      .mapPartitions(it => Iterator(decideTask(ctx, it.toSeq)))
+      .collect()
+    // a fresh pair has its candidate on one side, so no two tasks export
+    // the same pair; the dedupe keeps the store rows identical even if
+    // that ever changed
+    LocalRound(parts.flatMap(_._1).sortBy(_.label),
+      parts.iterator.map(_._2).toSeq :+ indexLineage,
+      parts.iterator.flatMap(_._3).distinctBy(p => (p.subLabel, p.supLabel)).toVector)
+  }
+
+  /** Stage 3 for a round above [[DriverRows]] candidates: link + decide,
+    * executor-side against the broadcast snapshot. `candidates` must carry
+    * the per-mention `priors` column ([[candidatesWithPriors]]) — pass a
+    * null/absent slice as an empty array, never the full history. One
+    * task per candidate partition returns its decisions, one lineage row
+    * and the pairs it scored fresh; the output is cached, and decisions
+    * and pairs stay distributed. */
+  def decideRound(spark: SparkSession, candidates: DataFrame, taxo: MutableTaxo,
+                  models: IconModels, cfg: PipelineConfig, round: Int,
+                  embCache: graft.retrieve.SnapshotEmbeddings = null,
+                  embStore: DataFrame = null,
+                  candLabels: DataFrame = null): DistributedRound = {
+    import spark.implicits._
+    val t0 = System.currentTimeMillis()
+    val (ctx, seedSource) = decideSetup(spark, taxo, models, cfg, round, embCache, embStore)
+    var seedsDF: DataFrame = null
+    var seedRelease: () => Unit = () => ()
+    val indexLineage = seedSource match {
+      case Right(lineage) => lineage
+      case Left(center) =>
+        // embed from the PRE-priors-join mention list when the caller
         // provides it — selecting mentions out of the joined candidates
         // would re-execute the O(history) prior-slice join just to list
         // strings (Spark does not prune a left-outer join from the plan)
-        val candVecs = (if (candLabels != null) candLabels else candidates)
-          .select(col("mention")).as[String]
-          .mapPartitions { it =>
-            val emb = bModels.value.emb
-            it.grouped(64).flatMap(chunk => chunk.iterator.zip(emb.embed(chunk).iterator))
-          }.toDF("mention", "qvec").persist()
-        val sdf = graft.retrieve.DistributedBandedRetrieve.seeds(
-          spark, candVecs, embStore, center, models.emb.dim, retrieve).persist()
+        val (candVecs, sdf) = retrieveSeeds(spark, ctx,
+          if (candLabels != null) candLabels else candidates, embStore, center, models.emb.dim)
+        candVecs.persist()
+        sdf.persist()
         val nSeeded = sdf.count()
         seedsDF = sdf
         seedRelease = () => { sdf.unpersist(); candVecs.unpersist(); () }
-        (sc.broadcast(new VectorIndex(Array.empty, Array.empty): graft.retrieve.SeedSearch),
-          LineageRow(round, -1, "retrieve_dist", nodeIds.length, nSeeded, 0,
-            System.currentTimeMillis() - tIdx))
-      }
+        LineageRow(round, -1, "retrieve_dist", taxo.numberOfNodes, nSeeded, 0,
+          System.currentTimeMillis() - t0)
+    }
 
-    val hasPriors = candidates.columns.contains("priors")
     val withPriors =
-      if (hasPriors) candidates.select(col("mention"), col("priors"))
+      if (candidates.columns.contains("priors")) candidates.select(col("mention"), col("priors"))
       else candidates.select(col("mention"),
         lit(null).cast("array<struct<subLabel:string,supLabel:string,p:double>>").as("priors"))
     val input =
@@ -498,68 +647,17 @@ object KgPipeline {
        else withPriors.withColumn("seeds", lit(null).cast("array<bigint>")))
         .select(col("mention"), col("priors"), col("seeds"))
         .as[(String, Seq[ScoredPair], Seq[Long])]
-    val raw = input
-      .mapPartitions { it =>
-        val t0 = System.currentTimeMillis()
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val snapshot = bTaxo.value
-        val m = bModels.value
-        val index = bIndex.value
-        val cache = new ScoreCache(m.sub)
-        val lexical = bLexical.value
-        val batch = it.toSeq
-        for ((_, priors, _) <- batch; if priors != null)
-          cache.importAll(priors.iterator.map(p => (p.subLabel, p.supLabel, p.p)))
-        // candidate embeddings in ≤64-label model calls (M1 batch contract;
-        // one model invocation per row was a 64× inflation with a real
-        // encoder), then one decision per candidate against the snapshot.
-        // In distributed-retrieve mode the seeds arrived as a column and
-        // the query vector is not needed at all — the one embedding pass
-        // happened in the distributed retrieval stage.
-        val queryVecs: Iterator[Array[Float]] =
-          if (distMode) Iterator.continually(null)
-          else m.emb.embedBatched(batch.map(_._1)).iterator
-        val decisions = batch.iterator.zip(queryVecs).map {
-          case ((label, _, seeds), qv) =>
-            val base =
-              if (distMode) { if (seeds == null) Nil else seeds.toSeq }
-              else index.search(qv, retrieve)._2.toSeq
-            val d = IconTraversal.decide(snapshot, label, base, cache, iconCfg,
-              l => lexical.get(Tokenset.hash64(l)))
-            DecisionRow(d.label, d.eqv.map(_._1), d.eqv.map(_._2), d.sup, d.sub)
-        }.toVector
-        val lineage = LineageRow(round, pid, "decide", batch.size, decisions.size,
-          cache.pairsScored, System.currentTimeMillis() - t0)
-        // fresh pairs only (scored this round, not imported from the prior
-        // slice): the checkpoint's scored-pairs delta is exactly this set,
-        // so the per-round store write needs NO anti-join against history
-        // — O(delta) end to end where the anti-join read was O(history)
-        val scored = cache.exportFresh.map { case (a, b, p) => ScoredPair(a, b, p) }
-        Iterator((decisions, Seq(lineage), scored))
-      }
-
-    if (cfg.maxCandidatesPerRound <= DriverRows) {
-      // round-sized: one action, no cache, no scored-pairs shuffle. A
-      // fresh pair has its candidate on one side, so no two tasks export
-      // the same pair; the dedupe keeps the store rows identical even if
-      // that ever changed.
-      val parts = try raw.collect() finally seedRelease()
-      LocalRound(parts.flatMap(_._1).sortBy(_.label),
-        parts.iterator.flatMap(_._2).toSeq :+ indexLineage,
-        parts.iterator.flatMap(_._3).distinctBy(p => (p.subLabel, p.supLabel)).toVector)
-    } else {
-      // scored pairs AND decisions stay distributed (run() spills decisions
-      // to the round's parquet and streams the deterministic commit from a
-      // sorted local iterator — driver memory is bounded by one partition,
-      // not the candidate count); lineage is one row per task, so
-      // collecting it is safe at any scale.
-      val cached = raw.persist()
-      val scoredDF = cached.flatMap(_._3).toDF("subLabel", "supLabel", "p")
-        .groupBy("subLabel", "supLabel").agg(first("p").as("p"))
-      val lineageRows = cached.flatMap(_._2.iterator).collect().toSeq :+ indexLineage
-      DistributedRound(cached.flatMap(_._1.iterator), lineageRows, scoredDF,
-        () => { cached.unpersist(); seedRelease() })
-    }
+    // scored pairs AND decisions stay distributed (run() spills decisions
+    // to the round's parquet and streams the deterministic commit from a
+    // sorted local iterator — driver memory is bounded by one partition,
+    // not the candidate count); lineage is one row per task, so
+    // collecting it is safe at any scale.
+    val cached = input.mapPartitions(it => Iterator(decideTask(ctx, it.toSeq))).persist()
+    val scoredDF = cached.flatMap(_._3).toDF("subLabel", "supLabel", "p")
+      .groupBy("subLabel", "supLabel").agg(first("p").as("p"))
+    val lineageRows = cached.map(_._2).collect().toSeq :+ indexLineage
+    DistributedRound(cached.flatMap(_._1.iterator), lineageRows, scoredDF,
+      () => { cached.unpersist(); seedRelease() })
   }
 
   /** Commit result: next id-allocator value, inserted-edge provenance
@@ -623,16 +721,17 @@ object KgPipeline {
     * showed canonicalize as 47% of the 2-round wall with no breakdown —
     * stages: canon_embed / canon_pairs / canon_cc / canon_preload /
     * canon_apply; the driver path fuses pairs+cc into canon_cc). */
-  /** `survivorVecs` is the round's (vec_id, embedding) table of mints that
-    * SURVIVED the merge — the per-round delta of the distributed embedding
-    * store (the at-scale decide path retrieves seeds from that store, so
-    * the checkpoint persists it like nodes/edges; rounds are purely
-    * additive, merges only ever remove same-round mints). Call `release`
-    * after the checkpoint has written it. */
+  /** `survivorVecs` builds the round's (vec_id, embedding) table of mints
+    * that SURVIVED the merge — the per-round delta of the distributed
+    * embedding store (the at-scale decide path retrieves seeds from that
+    * store, so the checkpoint persists it like nodes/edges; rounds are
+    * purely additive, merges only ever remove same-round mints). Only a
+    * run with an embedding store calls it. Call `release` after the
+    * checkpoint has written it. */
   case class CanonResult(merge: Map[Long, Long],
                          addedEdges: Seq[(Long, Long, String)],
                          lineage: Seq[LineageRow],
-                         survivorVecs: DataFrame,
+                         survivorVecs: () => DataFrame,
                          release: () => Unit)
 
   /** Stage 5: canonicalization — embedding near-dup pairs among this
@@ -676,8 +775,8 @@ object KgPipeline {
         else models.emb.embedBatched(newConcepts.map(_._1))
       if (preloadWanted(0) && newConcepts.nonEmpty)
         embCache.preload(newConcepts.map(_._2).toArray, emb1)
-      val sv1 = newConcepts.map(_._2).zip(emb1).toDF("vec_id", "embedding")
-      return CanonResult(Map.empty, Nil, Nil, sv1, () => ())
+      return CanonResult(Map.empty, Nil, Nil,
+        () => newConcepts.map(_._2).zip(emb1).toDF("vec_id", "embedding"), () => ())
     }
     if (n <= 10000) {
         val ids = newConcepts.map(_._2).toArray
@@ -692,11 +791,11 @@ object KgPipeline {
           embCache.preload(keep.map(ids).toArray, keep.map(emb).toArray)
           ((), keep.size.toLong)
         }
-        val sv = keep.map(i => (ids(i), emb(i))).toDF("vec_id", "embedding")
         val added = sub("canon_apply", m.size.toLong) {
           val a = applyMerge(taxo, m); (a, a.size.toLong)
         }
-        CanonResult(m, added, lin.toSeq, sv, () => ())
+        CanonResult(m, added, lin.toSeq,
+          () => keep.map(i => (ids(i), emb(i))).toDF("vec_id", "embedding"), () => ())
       } else {
         // Spark path for rounds that mint concept sets beyond driver scale:
         // distributed embedding, LSH-blocked near-dup pairs + distributed
@@ -752,7 +851,7 @@ object KgPipeline {
           val m =
             if (nPairs == 0) Map.empty[Long, Long]
             else if (nPairs <= 1000000)
-              unionFindMinId(pairs.as[(Long, Long)].collect())
+              GraphOps.unionFindMinId(pairs.as[(Long, Long)].collect())
             // driverPairLimit = 0: this branch has already dispatched on
             // nPairs > 1M, so skip the operator's own regime probe
             else GraphOps.connectedComponents(pairs, driverPairLimit = 0L)
@@ -786,7 +885,7 @@ object KgPipeline {
         val added = sub("canon_apply", out.size.toLong) {
           val a = applyMerge(taxo, out); (a, a.size.toLong)
         }
-        CanonResult(out, added, lin.toSeq, survivors, () => { vecs.unpersist(); () })
+        CanonResult(out, added, lin.toSeq, () => survivors, () => { vecs.unpersist(); () })
       }
   }
 
@@ -799,22 +898,14 @@ object KgPipeline {
     canonicalizeLocal(newConcepts.map(_._2).toArray,
       models.emb.embedBatched(newConcepts.map(_._1)), threshold)
 
-  /** Min-id union-find over an explicit pair list: dup -> canonical map for
-    * every non-root member. Same semantics as the distributed
-    * connectedComponents + min-component filter it stands in for. The
-    * canonical implementation moved to [[GraphOps.unionFindMinId]] (round
-    * 6: connectedComponents itself now regime-switches through it); this
-    * forwarder keeps the pipeline-local name the specs pin. */
-  private[graft] def unionFindMinId(pairs: Array[(Long, Long)]): Map[Long, Long] =
-    GraphOps.unionFindMinId(pairs)
-
   private def canonicalizeLocal(ids: Array[Long], emb: Array[Array[Float]],
                                 threshold: Double): Map[Long, Long] =
-    // one union-find implementation in this file: min-id roots are
-    // identical with or without path compression, so reusing the
-    // compressed twin changes nothing but keeps the two paths from
-    // silently diverging
-    unionFindMinId(nearDupPairsLocal(emb, threshold).map { case (i, j) => (ids(i), ids(j)) })
+    // one union-find implementation (GraphOps, shared with the Spark
+    // path above): min-id roots are identical with or without path
+    // compression, so reusing the compressed twin changes nothing but
+    // keeps the two paths from silently diverging
+    GraphOps.unionFindMinId(
+      nearDupPairsLocal(emb, threshold).map { case (i, j) => (ids(i), ids(j)) })
 
   /** Index pairs (i < j) whose cosine, rounded HALF_UP to 6 places, is ≥
     * `threshold` (a zero vector has cosine 0). Each norm is computed once,
@@ -1042,9 +1133,15 @@ object KgPipeline {
       }
     }
 
-    val mentions = (if (htmlInput) extractMentionsFromHtml(corpus, textCol, cfg.minMentionFreq)
-      else extractMentions(corpus, textCol, cfg.minMentionFreq))
-      .persist()
+    // cached only when a later round of this run reads the counts again
+    val mentions = {
+      val m = if (htmlInput) extractMentionsFromHtml(corpus, textCol, cfg.minMentionFreq)
+        else extractMentions(corpus, textCol, cfg.minMentionFreq)
+      if (cfg.rounds - resumeRound > 1) m.persist() else m
+    }
+    // the slice collect of a round-sized round is skipped while the scored
+    // store has no rows: a fresh run's rounds until one scores a pair
+    var storeEmpty = resumeRound == 0
 
     val phase = mutable.LinkedHashMap.empty[String, Double]
     val sc = spark.sparkContext
@@ -1113,27 +1210,40 @@ object KgPipeline {
       // reference has the same property (icon.py processes each mention
       // once), so the divergence is from a hypothetical oracle, not from
       // the reference semantics.
-      // limit() would collapse downstream parallelism to one task, so the
-      // candidate batch is re-spread by mention hash before the decide stage
       val resolvedHashes = sameAs.iterator.map(s => Tokenset.hash64(s._1)).toSet
       val lexHashes =
         (taxo.nodes.map(n => Tokenset.hash64(taxo.getLabel(n))) ++ resolvedHashes).toDF("h")
       val hashUdf = udf((s: String) => Tokenset.hash64(s))
-      val fresh = timed("candidates") {
-        mentions.withColumn("h", hashUdf(col("mention")))
-          .join(lexHashes, Seq("h"), "left_anti")
-          .orderBy(col("freq").desc, col("mention").asc)
-          .limit(cfg.maxCandidatesPerRound)
-          .select("mention", "freq")
-          .repartition(32, col("mention"))
-          .localCheckpoint(true)
-      }
-
-      val withPriors = timed("prior_slice")(candidatesWithPriors(fresh, scoredStore))
-      val result = timed("decide")(
-        decideRound(spark, withPriors, taxo, models, cfg, r, embCache, embStore,
-          candLabels = fresh.select(col("mention"))))
+      def top = mentions.withColumn("h", hashUdf(col("mention")))
+        .join(lexHashes, Seq("h"), "left_anti")
+        .orderBy(col("freq").desc, col("mention").asc)
+        .limit(cfg.maxCandidatesPerRound)
+        .select("mention", "freq")
+      val result: RoundResult =
+        if (cfg.maxCandidatesPerRound <= DriverRows) {
+          // round-sized: the candidates and their prior slice come to the
+          // driver in one collect each, and the decide tasks run as one
+          // plain RDD job over them (decideLocal)
+          val cands = timed("candidates")(top.select("mention").collect().map(_.getString(0)))
+          val priors = timed("prior_slice") {
+            if (storeEmpty) Map.empty[String, Seq[ScoredPair]]
+            else priorsByCandidate(cands, scoredStore)
+          }
+          timed("decide")(decideLocal(spark, cands.toSeq.map(m => (m, priors.getOrElse(m, Nil))),
+            taxo, models, cfg, r, embCache, embStore))
+        } else {
+          // limit() collapses downstream parallelism to one task, so the
+          // candidate batch is re-spread by mention hash before the decide
+          // stage
+          val fresh = timed("candidates") {
+            top.repartition(32, col("mention")).localCheckpoint(true)
+          }
+          val withPriors = timed("prior_slice")(candidatesWithPriors(fresh, scoredStore))
+          timed("decide")(decideRound(spark, withPriors, taxo, models, cfg, r, embCache,
+            embStore, candLabels = fresh.select(col("mention"))))
+        }
       allLineage ++= result.lineage
+      storeEmpty &&= result.lineage.forall(l => l.stage != "decide" || l.scoredPairs == 0)
 
       // commit source (the §4.5 driver/distributed pattern): a round-sized
       // round arrives collected and label-sorted. Above DriverRows
@@ -1277,7 +1387,7 @@ object KgPipeline {
         // rounds — the identical delta/compaction scheme the taxonomy and
         // scored store use, so resume reconstructs all three the same way
         if (embStore != null) {
-          val survivors = canonRes.survivorVecs.select(col("vec_id"), col("embedding"))
+          val survivors = canonRes.survivorVecs().select(col("vec_id"), col("embedding"))
           if (embFullWrite || compact) {
             pendingWrites += bg(embStore.union(survivors)
               .write.mode(SaveMode.Overwrite).parquet(s"$rd/embeddings"))

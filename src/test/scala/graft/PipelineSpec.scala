@@ -141,6 +141,13 @@ class PipelineSpec extends SparkSpecBase {
         .as[(String, String, String, Int, String)].collect().sortBy(r => r.toString)
     assert(rows(rResumed.triples).toSeq == rows(rFull.triples).toSeq)
     assert(rResumed.roundsRun == 1) // only round 2 re-ran
+    // the resumed round-sized round spreads its decide stage over
+    // min(defaultParallelism, n) tasks
+    val decide2 = rResumed.lineage.filter(col("stage") === "decide" && col("round") === 2)
+      .select("rowsIn").as[Long].collect()
+    val n2 = decide2.sum
+    assert(n2 > 1, s"round 2 decided $n2 candidates")
+    assert(decide2.length == math.min(spark.sparkContext.defaultParallelism.toLong, n2))
   }
 
   test("decide stage embeds through the batch-64 model contract (M1)") {
@@ -388,7 +395,7 @@ class PipelineSpec extends SparkSpecBase {
         driverPairLimit = 0L)
       .filter(col("node") =!= col("component"))
       .as[(Long, Long)].collect().toMap
-    assert(KgPipeline.unionFindMinId(pairs.toArray) == dist)
+    assert(graft.spark.GraphOps.unionFindMinId(pairs.toArray) == dist)
   }
 
   test("connectedComponents driver regime equals the distributed fixpoint") {
@@ -413,7 +420,7 @@ class PipelineSpec extends SparkSpecBase {
     // multi-minute stall at this size, milliseconds with compression
     val n = 100000
     val pairs = Array.tabulate(n)(i => ((n - 1 - i).toLong, (n - i).toLong))
-    val m = KgPipeline.unionFindMinId(pairs)
+    val m = graft.spark.GraphOps.unionFindMinId(pairs)
     assert(m.size == n)
     assert((1 to n).forall(k => m(k.toLong) == 0L))
   }
@@ -521,35 +528,88 @@ class PipelineSpec extends SparkSpecBase {
     for (n <- t.nodes) assert(!t.getAncestors(n).contains(n), s"cycle at $n")
   }
 
-  test("round-sized and distributed decide rounds write the same checkpoint and triples") {
+  /** Runs `c` once round-sized (one collected round, decideLocal) and once
+    * distributed (a cached round with shuffled scored pairs, decideRound)
+    * and checks that both write the same triples and checkpoint tables in
+    * every round. Returns the round-sized run's directory and result. */
+  private def regimesAgree(c: KgPipeline.PipelineConfig, corp: org.apache.spark.sql.DataFrame,
+                           name: String): (String, KgPipeline.RunResult) = {
     import spark.implicits._
-    // every candidate of this corpus fits either bound, so the two configs
-    // admit the same candidates: one collects the round (LocalRound), the
-    // other caches it and shuffles the scored pairs (DistributedRound)
-    val local = Files.createTempDirectory("kgreg_local").toString
-    val dist = Files.createTempDirectory("kgreg_dist").toString
-    def go(maxCands: Int, dir: String) = KgPipeline.run(spark, corpus(300, 4), "text",
-      KgPipeline.domainModels(), cfg(2).copy(maxCandidatesPerRound = maxCands), dir)
+    val local = Files.createTempDirectory(s"${name}_local").toString
+    val dist = Files.createTempDirectory(s"${name}_dist").toString
+    def go(maxCands: Int, dir: String) = KgPipeline.run(spark, corp, "text",
+      KgPipeline.domainModels(), c.copy(maxCandidatesPerRound = maxCands), dir)
     val rLocal = go(KgPipeline.DriverRows, local)
     val rDist = go(KgPipeline.DriverRows + 1, dist)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     assert(rows(rLocal.triples) == rows(rDist.triples))
     assert(rows(rLocal.triples).nonEmpty)
-    for (r <- 1 to 2; t <- Seq("nodes_delta", "edges_delta", "scored_pairs_delta", "deltas",
-                               "sameas")) {
+    for (r <- 1 to c.rounds; t <- Seq("nodes_delta", "edges_delta", "scored_pairs_delta",
+                                      "deltas", "sameas")) {
       val a = spark.read.parquet(s"$local/round=$r/$t")
       val b = spark.read.parquet(s"$dist/round=$r/$t")
       assert(a.schema == b.schema, s"round $r $t schema")
       assert(rows(a) == rows(b), s"round $r $t rows")
     }
-    assert(spark.read.parquet(s"$local/round=1/scored_pairs_delta").count() > 0)
     assert(rows(spark.read.parquet(s"$local/triples")) == rows(rLocal.triples))
-    // the decide tasks' lineage rows match apart from their wall times
-    def decideLineage(res: KgPipeline.RunResult) =
-      res.lineage.filter($"stage" === "decide").drop("wallMs").collect()
-        .map(_.toSeq.mkString("|")).sorted.toSeq
-    assert(decideLineage(rLocal) == decideLineage(rDist))
+    // the regimes split a round into different tasks (round-sized:
+    // min(defaultParallelism, n); distributed: 32), so their decide
+    // lineage agrees in per-round totals of rowsIn, rowsOut, scoredPairs
+    def decideRows(res: KgPipeline.RunResult) =
+      res.lineage.filter($"stage" === "decide")
+        .select("round", "rowsIn", "rowsOut", "scoredPairs")
+        .as[(Int, Long, Long, Long)].collect().toSeq.groupBy(_._1)
+    def totals(res: KgPipeline.RunResult) = decideRows(res).map { case (r, xs) =>
+      r -> (xs.map(_._2).sum, xs.map(_._3).sum, xs.map(_._4).sum) }
+    assert(totals(rLocal) == totals(rDist))
+    assert(totals(rLocal).keySet == (1 to c.rounds).toSet)
+    val dp = spark.sparkContext.defaultParallelism
+    for ((r, xs) <- decideRows(rLocal)) {
+      val n = xs.map(_._2).sum
+      assert(xs.size == math.min(dp.toLong, math.max(1L, n)),
+        s"round $r: ${xs.size} decide tasks for $n candidates")
+    }
+    (local, rLocal)
+  }
+
+  test("round-sized and distributed decide rounds write the same checkpoint and triples") {
+    // every candidate of this corpus fits either bound, so the two configs
+    // admit the same candidates
+    val (local, _) = regimesAgree(cfg(2), corpus(300, 4), "kgreg")
+    assert(spark.read.parquet(s"$local/round=1/scored_pairs_delta").count() > 0)
+  }
+
+  test("round-sized and distributed rounds agree on a round with a non-empty prior slice") {
+    import spark.implicits._
+    // one retrieval seed crops each search space to the seed's subtree, so
+    // round 1 places "batch query" and rejects the other mentions (no eqv,
+    // no sup); commitStream skips those, and they return in round 2 with
+    // the same seeds and their round-1 pairs as prior slice
+    val c = cfg(2).copy(retrieveSize = 1)
+    val corp = Seq("batch query", "tabled rowing", "hashing keying", "joiner sorter",
+      "scanner filterer").flatMap(Seq.fill(3)(_)).toDF("text")
+    val (local, rLocal) = regimesAgree(c, corp, "kgslice")
+    // round 2's candidates, recomputed: every mention that is neither a
+    // label of the round-1 taxonomy nor resolved by a round-1 sameAs
+    val seed = KgPipeline.seedTaxo()
+    val known = (seed.nodes.map(seed.getLabel) ++
+      spark.read.parquet(s"$local/round=1/nodes_delta").select("label").as[String].collect() ++
+      spark.read.parquet(s"$local/round=1/sameas").select("a").as[String].collect())
+      .map(graft.lexical.Tokenset.hash64).toSet
+    val cands2 = KgPipeline.extractMentions(corp, "text", c.minMentionFreq)
+      .select("mention").as[String].collect()
+      .filterNot(m => known(graft.lexical.Tokenset.hash64(m)))
+    val decided2 = rLocal.lineage.filter($"stage" === "decide" && $"round" === 2)
+      .select("rowsIn").as[Long].collect().sum
+    assert(cands2.length > 1 && cands2.length == decided2, s"${cands2.length} vs $decided2")
+    val slice = KgPipeline.priorScoreSlice(cands2.toSeq.toDF("mention"),
+      spark.read.parquet(s"$local/round=1/scored_pairs_delta"))
+    assert(slice.count() > 0, "round 2's prior slice is empty")
+    // the slice served round 2: it re-scored no pair round 1 had scored
+    def pairs(r: Int) = spark.read.parquet(s"$local/round=$r/scored_pairs_delta")
+      .select("subLabel", "supLabel").as[(String, String)].collect().toSet
+    assert(pairs(1).intersect(pairs(2)).isEmpty)
   }
 
   test("a round-sized round's checkpoint phase starts no Spark job") {
@@ -571,7 +631,10 @@ class PipelineSpec extends SparkSpecBase {
       while (!stages.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
       assert(stages.contains("marker"), "listener saw no marker job")
       val seen = stages.toArray.toSeq
-      assert(seen.contains("decide"), s"phases seen: $seen")
+      // a fresh run's round 1 has an empty scored store (no slice collect)
+      // and runs its decide tasks as one job
+      assert(seen.count(_ == "decide") == 1, s"phases seen: $seen")
+      assert(!seen.contains("prior_slice"), s"phases seen: $seen")
       assert(!seen.contains("checkpoint"), s"phases seen: $seen")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
