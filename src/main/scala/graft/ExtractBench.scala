@@ -1,32 +1,48 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.extract.MentionScanner
+import graft.webtext.WebtextGen
 
-/** Isolated extraction-phase scaling probe: parquet scan → HTML extract →
-  * bigram explode → mention count. Usage: runMain graft.ExtractBench <cores> <path> */
+/** Single-thread mention-kernel probe (BENCH/BASELINE.md §9s, §9u): counts
+  * the WebtextGen pages 0-199,999 into one `MentionCounts` per pass with
+  * `MentionScanner.countPageInto`, as one partition of
+  * `KgPipeline.extractMentionsFromHtml` would. 12 passes; the first 2 are
+  * warm-up and dropped, and the median of the other 10 is reported as
+  * MB/s of html, with a digest of the counts (equal on every pass, else
+  * the probe fails). No Spark session. Compare builds by alternating JVMs.
+  * Usage: runMain graft.ExtractBench */
 object ExtractBench {
+  private final val Pages = 200000
+
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // JSON output: '.' decimal separator regardless of host locale
-    val cores = args(0).toInt
-    val path = if (args.length > 1) args(1) else "/tmp/kgbench_corpus_500000"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (512 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the page cache + JIT with an untimed pass
-    spark.read.parquet(path).count()
-    val t0 = System.nanoTime()
-    val corpus = spark.read.parquet(path)
-      .select(graft.extract.HtmlExtract.extractBinary(col("html")).as("text"))
-    val n = graft.pipeline.KgPipeline.extractMentions(corpus, "text", 2L).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val parts = spark.read.parquet(path).rdd.getNumPartitions
-    println(f"""{"extract_bench":{"cores":$cores,"mentions":$n,"sec":$sec%.2f,"scan_partitions":$parts}}""")
-    spark.stop()
+    val html = Array.tabulate(Pages)(k => WebtextGen.pageFor(k.toLong)._3)
+    val mb = html.iterator.map(_.length.toLong).sum / 1e6
+    val passes = 12
+    val warmup = 2
+    val runs = (0 until passes).map { _ =>
+      val state = new MentionScanner.MentionCounts()
+      val t0 = System.nanoTime()
+      var k = 0
+      while (k < Pages) { MentionScanner.countPageInto(html(k), state); k += 1 }
+      val sec = (System.nanoTime() - t0) / 1e9
+      (sec, digest(state))
+    }
+    val digests = runs.map(_._2).distinct
+    require(digests.size == 1, s"passes disagree on the counts: $digests")
+    val timed = runs.drop(warmup).map(_._1)
+    val sorted = timed.sorted
+    val median = (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2
+    println(f"""{"extract_bench":{"pages":$Pages,"mb":$mb%.1f,""" +
+      f""""median_s":$median%.3f,"mb_per_s":${mb / median}%.1f,""" +
+      s""""passes_s":[${timed.map(s => f"$s%.3f").mkString(",")}],${digests.head}}}""")
+  }
+
+  /** Distinct mentions, total occurrences and an FNV-1a digest of the
+    * sorted (mention, count) rows, as JSON fields. */
+  private def digest(state: MentionScanner.MentionCounts): String = {
+    val rows = state.iterator.toVector.sorted
+    val h = graft.lexical.Tokenset.fnv1a64(rows.map { case (m, c) => s"$m\t$c" }.mkString("\n"))
+    f""""mentions":${rows.size},"occurrences":${rows.map(_._2).sum},"digest":"$h%016x""""
   }
 }

@@ -206,17 +206,20 @@ object KgPipeline {
     * lowercase to ASCII — U+0130 'İ' → 'i', U+212A KELVIN SIGN → 'k', so
     * `<scrİpt>` opens a script block — and the full-string lowercase the
     * column twin applies can expand one char into several. Both paths
-    * count into one per-partition state. */
+    * count into one per-partition state, capped at `maxStateEntries`
+    * (> 0) entries. */
   def extractMentionsFromHtml(corpus: DataFrame, htmlCol: String, minFreq: Long,
                               maxStateEntries: Int = 1 << 22): DataFrame = {
+    require(maxStateEntries > 0, s"maxStateEntries must be positive, got $maxStateEntries")
     val spark = corpus.sparkSession
     import spark.implicits._
     corpus.select(col(htmlCol).cast("binary")).as[Array[Byte]]
       .mapPartitions { it =>
         // Unlike the hash-aggregate plan this replaces, the per-partition
         // counter can't spill — so it's capped: once the chunk's distinct
-        // bigrams OR interned tokens reach maxStateEntries (default 4M ≈
-        // ~150 MB incl. the dict) the partial counts flush as rows and the
+        // bigrams OR interned tokens reach maxStateEntries (default 2^22;
+        // a state with 2^22 short tokens and 2^22 - 1 bigrams measures
+        // 268 MB by SizeEstimator) the partial counts flush as rows and the
         // state resets; the downstream sum-groupBy merges partials exactly.
         // The cap holds INSIDE a document too: a page scan is resumable,
         // so on mid-document overflow the scan PAUSES, this iterator
@@ -224,28 +227,26 @@ object KgPipeline {
         // same position — peak state is the cap, never a pathological
         // page's distinct-bigram count. Real web text (unbounded bigram
         // cardinality) stays memory-safe; the flush never fires on
-        // vocabulary-bounded corpora.
+        // vocabulary-bounded corpora. One PageScan counts every page of
+        // the partition: no per-page scanner objects.
         new Iterator[(String, Long)] {
           import graft.extract.MentionScanner
           private var inner: Iterator[(String, Long)] = Iterator.empty
           private val state = new MentionScanner.MentionCounts()
-          private var page: MentionScanner.PageScan = null
+          private val scan = new MentionScanner.PageScan(state, maxStateEntries)
+          private var inPage = false
           private var finalDrained = false
           private def refill(): Unit = {
             while (!inner.hasNext && !finalDrained) {
-              if (page != null) {
+              if (inPage) {
                 // continue the in-flight page until done or next pause
-                if (page.resume()) {
+                if (scan.resume()) {
                   inner = state.iterator // materialized before the reset
-                  page.drainReset()
-                } else {
-                  page = null
-                  if (state.full(maxStateEntries)) { inner = state.iterator; state.reset() }
-                }
+                  scan.drainReset()
+                } else inPage = false
               } else if (it.hasNext) {
                 val h = it.next()
-                if (h != null && h.nonEmpty)
-                  page = MentionScanner.PageScan(h, state, maxStateEntries)
+                if (h != null && h.nonEmpty) { scan.start(h); inPage = true }
               } else {
                 finalDrained = true
                 inner = state.iterator

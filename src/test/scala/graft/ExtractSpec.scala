@@ -172,30 +172,131 @@ class ExtractSpec extends SparkSpecBase {
     assert(capped == relational)
   }
 
-  test("byte loop equals the char path page by page on random ASCII markup pages") {
-    import graft.extract.MentionScanner
+  /** Random all-ASCII markup pages: tag, comment, script/style, entity
+    * (incl. `&AMP;` `&#;` `&#12;`), digit and stopword atoms, plus `extra`. */
+  private def randomMarkupPages(seed: Long, n: Int, extra: Seq[String] = Nil): Iterator[String] = {
     val atoms = Vector(
       "<p>", "</P>", "<B>", "<div class=\"a b\">", "<BR/>", "<", ">", "<!--", "-->",
       "<!-- c -->", "<script", "<script>", "</SCRIPT>", "</script>", "<STYLE x>", "</style>",
       "<Style>", "&nbsp;", "&amp;", "&lt;", "&gt;", "&quot;", "&#39;", "&apos;", "&AMP;",
       "&#;", "&#12;", "&#65", "&", "#", ";", "table", "Join", "HASH", "scan", "x9",
-      "42", "0", "7", "the", "of", "and", "a", " ", " ", "\n", "\t", "-", "'", "/")
-    val rnd = new scala.util.Random(20261017L)
-    def counts(state: MentionScanner.MentionCounts) =
-      (state.iterator.toMap, (0 until state.dict.size).map(state.dict.token))
+      "42", "0", "7", "the", "of", "and", "a", " ", " ", "\n", "\t", "-", "'", "/") ++ extra
+    val rnd = new scala.util.Random(seed)
+    Iterator.fill(n)(Seq.fill(1 + rnd.nextInt(40))(atoms(rnd.nextInt(atoms.size))).mkString)
+  }
+
+  /** A state's counts and its dictionary in id (first-seen) order. */
+  private def countsAndDict(state: graft.extract.MentionScanner.MentionCounts) =
+    (state.iterator.toMap, (0 until state.dict.size).map(state.dict.token))
+
+  test("byte loop equals the char path page by page on random ASCII markup pages") {
+    import graft.extract.MentionScanner
     var compared = 0
-    for (_ <- 0 until 20000) {
-      val page = Seq.fill(1 + rnd.nextInt(40))(atoms(rnd.nextInt(atoms.size))).mkString
+    for (page <- randomMarkupPages(20261017L, 20000)) {
       val bytes = page.getBytes("UTF-8")
       assert(bytes.forall(_ >= 0))
       val byChars = new MentionScanner.MentionCounts()
       MentionScanner.countMentionsInto(page, byChars)
       val byBytes = new MentionScanner.MentionCounts()
       MentionScanner.countPageInto(bytes, byBytes)
-      assert(counts(byBytes) == counts(byChars), s"page: $page")
+      assert(countsAndDict(byBytes) == countsAndDict(byChars), s"page: $page")
       if (byChars.bigrams.size > 0) compared += 1
     }
     assert(compared > 5000, s"only $compared pages had a bigram")
+  }
+
+  test("tokens of 1 to 64 bytes count alike on both paths, within a page and across pages") {
+    import graft.extract.MentionScanner
+    // mixed case and digits; packed keys hold up to 8 bytes, longer tokens
+    // are hashed — "TabLe123" (8) and "tABle1234" (9) share a prefix
+    val alphabet = "aQ7zK0mX9bR3"
+    def word(len: Int, salt: Int): String =
+      Seq.tabulate(len)(j => alphabet((j * 5 + salt) % alphabet.length)).mkString
+    val words = for (len <- Seq(1, 7, 8, 9, 16, 64); salt <- 0 until 3) yield word(len, salt)
+    val eight = "TabLe123"
+    val nine = "tABle1234"
+    val pages = Seq(
+      (words ++ words.reverse).mkString(" "),
+      s"$eight $nine $eight $nine ${nine.toUpperCase} ${eight.toLowerCase} the $nine",
+      words.map(w => s"<b>$w</b>").mkString("<p>", "&amp;", "</p>"),
+      s"<i>$eight</i>$nine<!-- $eight --><P CLASS=x>$nine&nbsp;${words(9)}</P>$eight",
+      s"${words.mkString("-")}<script>$nine</script>$nine ${"Z9" * 40} ${"z9" * 40}")
+    def reference(page: String) = {
+      val text = HtmlExtract.extractLocal(page)
+      (MentionScanner.mentionsFromText(text).groupBy(identity).view.mapValues(_.length.toLong).toMap,
+        text.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+").filter(_.nonEmpty).distinct.toSeq)
+    }
+    for (page <- pages) {
+      val byChars = new MentionScanner.MentionCounts()
+      MentionScanner.countMentionsInto(page, byChars)
+      val byBytes = new MentionScanner.MentionCounts()
+      MentionScanner.countPageInto(page.getBytes("UTF-8"), byBytes)
+      assert(countsAndDict(byBytes) == countsAndDict(byChars), s"page: $page")
+      assert(countsAndDict(byChars) == reference(page), s"page: $page")
+    }
+    val byChars = new MentionScanner.MentionCounts()
+    val byBytes = new MentionScanner.MentionCounts()
+    for (page <- pages) {
+      MentionScanner.countMentionsInto(page, byChars)
+      MentionScanner.countPageInto(page.getBytes("UTF-8"), byBytes)
+    }
+    assert(countsAndDict(byBytes) == countsAndDict(byChars))
+    assert(byBytes.dict.size == pages.flatMap(p => reference(p)._2).distinct.size)
+    assert(byBytes.iterator.toMap == pages.flatMap(p => reference(p)._1)
+      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap)
+    assert(byBytes.iterator.toMap.apply(s"${eight.toLowerCase} ${nine.toLowerCase}") == 3)
+  }
+
+  test("random caps: drained partials plus the final state equal the uncapped counts on both paths") {
+    import graft.extract.MentionScanner
+    // blocks of pages share one scanner and state, as a partition does;
+    // long tokens join the atoms so both key kinds pause and carry over
+    val pages = randomMarkupPages(20261018L, 20000,
+      Seq("Customer", "TabLe1234", "abcdefghijklmnop", "Q" * 64)).toVector
+    val rnd = new scala.util.Random(20261019L)
+    var from = 0
+    val pauses = Array(0, 0) // char path, byte path
+    while (from < pages.size) {
+      val block = pages.slice(from, from + 1 + rnd.nextInt(20))
+      from += block.size
+      val cap = 1 + rnd.nextInt(64)
+      val uncapped = new MentionScanner.MentionCounts()
+      block.foreach(p => MentionScanner.countMentionsInto(p, uncapped))
+      for (bytePath <- Seq(true, false)) {
+        val state = new MentionScanner.MentionCounts()
+        val scan = new MentionScanner.PageScan(state, cap)
+        val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+        for (p <- block) {
+          if (bytePath) scan.start(p.getBytes("UTF-8")) else scan.startChars(p)
+          while (scan.resume()) {
+            pauses(if (bytePath) 1 else 0) += 1
+            if (bytePath) {
+              // a bigram needs both its tokens, so cap 1 holds 2 dict entries
+              assert(state.dict.size <= math.max(cap, 2), s"cap $cap dict ${state.dict.size}")
+              assert(state.bigrams.size <= cap, s"cap $cap bigrams ${state.bigrams.size}")
+            } else {
+              assert(state.dict.size <= cap + 64 && state.bigrams.size <= cap + 64)
+            }
+            rows ++= state.iterator
+            scan.drainReset()
+          }
+        }
+        val merged = (rows ++ state.iterator).groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
+        assert(merged == uncapped.iterator.toMap, s"cap $cap, byte path $bytePath: $block")
+      }
+    }
+    assert(pauses.forall(_ > 2000), s"pauses: ${pauses.toSeq}")
+  }
+
+  test("a state cap below 1 is refused") {
+    import spark.implicits._
+    import graft.extract.MentionScanner
+    intercept[IllegalArgumentException](
+      MentionScanner.countPageInto("a b".getBytes("UTF-8"), new MentionScanner.MentionCounts(), 0))
+    intercept[IllegalArgumentException](
+      MentionScanner.countMentionsInto("a b", new MentionScanner.MentionCounts(), -1))
+    intercept[IllegalArgumentException](graft.pipeline.KgPipeline
+      .extractMentionsFromHtml(Seq("a b").toDF("html"), "html", 1L, maxStateEntries = 0))
   }
 
   test("pages with a non-ASCII byte keep the char path's tokens") {
