@@ -22,32 +22,31 @@ import scala.jdk.CollectionConverters._
   *   1. EXTRACT — per-partition mention detection over the corpus (codegen'd
   *      column ops, no UDF): bigram candidates + frequencies.
   *   2. DEDUPE — anti-join mention tokenset-hashes against the taxonomy's
-  *      lexical table (the reference's lexical cache P1), keep the top
-  *      `maxCandidatesPerRound` by frequency, and slice the scored-pairs
-  *      history down to the pairs touching a candidate (sub-score cache
-  *      M4). A round-sized round (≤ [[DriverRows]] candidates) collects
-  *      its candidates in one action and its slice in a second one,
-  *      skipped while the scored store is empty; a larger round
-  *      repartitions the candidates and joins the slice onto them.
+  *      lexical table (the reference's lexical cache P1) and keep the top
+  *      `maxCandidatesPerRound` by frequency. The round then runs in
+  *      chunks of at most [[DriverRows]] candidates, taken in mention
+  *      (= label) order. A round that fits one chunk collects its
+  *      candidates in one action; a larger one checkpoints the list once
+  *      and streams it. Each chunk slices the scored-pairs history down to
+  *      the pairs touching its candidates (sub-score cache M4) in one
+  *      collect, skipped while the scored store is empty.
   *   3. LINK + DECIDE — one task per candidate batch embeds its batch,
   *      kNN-retrieves bases from the broadcast index (ICON manual mode
   *      with auto_bases, icon.py:515-556), and runs the enhanced traversal
-  *      (P3) with task-local batched scoring. A round-sized round runs the
-  *      tasks as one plain RDD job over the driver-held candidates and
-  *      collects decisions, lineage and freshly scored pairs
-  *      ([[decideLocal]]); larger rounds run them over the candidate
-  *      Dataset and keep decisions and pairs distributed
-  *      ([[decideRound]]).
-  *   4. COMMIT — decisions, deterministically ordered, merge into the edge
-  *      delta on the driver with P4 cycle screening; new ids allocated
-  *      densely from max(id)+1.
+  *      (P3) with task-local batched scoring. A chunk's tasks run as one
+  *      plain RDD job over the driver-held candidates, which collects
+  *      decisions, lineage and freshly scored pairs ([[decideChunk]]).
+  *      Every chunk decides against the same frozen snapshot.
+  *   4. COMMIT — once every chunk has decided, the decisions merge into
+  *      the edge delta on the driver in label order with P4 cycle
+  *      screening; new ids allocated densely from max(id)+1.
   *   5. CANONICALIZE — equivalence pairs (eqv decisions + embedding
   *      near-dups among new concepts) → connected components → merge.
   *   6. CHECKPOINT — nodes/edges/scored-pairs/lineage parquet per round +
   *      COMMIT marker: the run is resumable from the last complete round.
-  *      Tables built on the driver (deltas, lineage, provenance, a
-  *      round-sized round's scored pairs) are written by the driver
-  *      ([[LocalParquet]], no Spark job); compaction snapshots and
+  *      Tables built on the driver (deltas, lineage, provenance, and the
+  *      fresh scored pairs, one part file per chunk) are written by the
+  *      driver ([[LocalParquet]], no Spark job); compaction snapshots and
   *      distributed data by Spark.
   *
   * The corpus is the distributed axis; the taxonomy is broadcast-sized
@@ -61,21 +60,26 @@ object KgPipeline {
   case class PipelineConfig(
       rounds: Int = 2,
       retrieveSize: Int = 5,
-      // at most DriverRows (100000) the round is round-sized: its decide
-      // output comes to the driver in one collect. A candidate's fresh
-      // pairs follow its search space (the retrieveSize seeds' paths, and
-      // above annNodeThreshold the maxChildFanout cap), not the snapshot
-      // size: 9.95 pairs per candidate against the seed taxonomy, 11.0
-      // against resumed 43k-, 196k- and 980k-node snapshots. Measured at
-      // the bound (100000 candidates, local[4]): the seed run holds ~180 MB
-      // of driver heap after GC (~140 MB pairs, ~16 MB decisions); against
-      // the 980k-node snapshot the collected round is 1.1M pairs, ~156 MB
-      // of pairs and ~16 MB of decisions, from a 58 MB serialized result
-      // (spark.driver.maxResultSize defaults to 1 GB). The round's prior
+      // a round decides in chunks of at most DriverRows (100000)
+      // candidates; each chunk's decide output comes to the driver in one
+      // collect. A candidate's fresh pairs follow its search space (the
+      // retrieveSize seeds' paths, and above annNodeThreshold the
+      // maxChildFanout cap), not the snapshot size: 9.95 pairs per
+      // candidate against the seed taxonomy, 11.0 against resumed 43k-,
+      // 196k- and 980k-node snapshots. Measured at one full chunk (100000
+      // candidates, local[4]): the seed run holds ~180 MB of driver heap
+      // after GC (~140 MB pairs, ~16 MB decisions); against the 980k-node
+      // snapshot the chunk is 1.1M pairs, ~156 MB of pairs and ~16 MB of
+      // decisions, from a 58 MB serialized result
+      // (spark.driver.maxResultSize defaults to 1 GB). The chunk's prior
       // slice is collected too, and is of the same order: its pairs are
       // the ones its candidates scored in earlier rounds, so ≈11 pairs per
-      // candidate, ~1.1M pairs at the bound. Above the bound candidates,
-      // slice, decisions and pairs stay distributed.
+      // candidate, ~1.1M pairs per full chunk. Fresh pairs go to disk chunk
+      // by chunk, so at any cap the driver holds one chunk's pairs.
+      // Decisions stay on the driver until the round commits: ~161 B each
+      // by SizeEstimator (3.2 MB for 20000 rand50k-mention decisions
+      // against the seed taxonomy), far below the ~1 KB node a committed
+      // decision adds to the snapshot, which maxSnapshotNodes bounds.
       maxCandidatesPerRound: Int = 500,
       minMentionFreq: Long = 2L,
       icon: IconConfig = IconConfig(mode = "manual", inputConcepts = Seq("_")),
@@ -275,55 +279,36 @@ object KgPipeline {
                         rowsIn: Long, rowsOut: Long, scoredPairs: Long, wallMs: Long)
   case class ScoredPair(subLabel: String, supLabel: String, p: Double)
 
-  /** Read schema of a scored-pairs table: passing it skips the schema
-    * inference job a bare `spark.read.parquet` runs. */
+  /** Schema of a scored-pairs table as the driver writes it, and the read
+    * schema: passing the latter skips the schema inference job a bare
+    * `spark.read.parquet` runs. */
+  private val ScoredPairRows = LocalParquet.schemaOf[ScoredPair]()
   private val ScoredPairSchema = org.apache.spark.sql.types.StructType(
-    LocalParquet.schemaOf[ScoredPair]().map(_.copy(nullable = true)))
+    ScoredPairRows.map(_.copy(nullable = true)))
 
   /** Local property naming the `run` phase (candidates, decide, commit,
     * checkpoint, ...) that started a Spark job; listeners read it from
     * the job's properties. */
   val StageProperty = "graft.stage"
 
-  /** Row bound of the driver-side decide paths. A round with
-    * `maxCandidatesPerRound` ≤ this is round-sized: its candidates and
-    * their prior slice are collected, and [[decideLocal]] brings its
-    * decisions, lineage and fresh scored pairs to the driver in one action
-    * ([[LocalRound]]). A larger round keeps them distributed
-    * ([[decideRound]]) and collects its decisions only when there are at
-    * most this many. */
+  /** Chunk bound of the decide stage. A round decides in chunks of at most
+    * this many candidates, taken in label order; [[decideChunk]] brings
+    * each chunk's decisions, lineage and fresh scored pairs to the driver
+    * in one action. A round with `maxCandidatesPerRound` ≤ this is one
+    * chunk, and its candidates come to the driver in one collect. */
   val DriverRows = 100000
 
-  /** The decide stage's output for one round; `release` frees what it
-    * cached once the round has been checkpointed. */
-  sealed trait RoundResult {
-    def lineage: Seq[LineageRow]
-    def release(): Unit = ()
-  }
-
-  /** A round-sized round, collected by one action: decisions label-sorted
-    * (the commit order), fresh scored pairs unique on (subLabel, supLabel). */
-  final case class LocalRound(decisions: Array[DecisionRow], lineage: Seq[LineageRow],
-                              scored: Seq[ScoredPair]) extends RoundResult
-
-  /** A round above [[DriverRows]] candidates: `decisions` and `scored` are
-    * distributed datasets that never transit the driver whole — run()
-    * spills decisions to the round's parquet and streams the commit from a
-    * sorted local iterator; `releaseCache` unpersists the round's
-    * intermediate once both have been checkpointed. */
-  final case class DistributedRound(decisions: org.apache.spark.sql.Dataset[DecisionRow],
-                                    lineage: Seq[LineageRow], scored: DataFrame,
-                                    releaseCache: () => Unit) extends RoundResult {
-    override def release(): Unit = releaseCache()
-  }
+  /** One chunk's decide output: decisions label-sorted (the commit order),
+    * one lineage row per task, fresh scored pairs unique on (subLabel,
+    * supLabel). */
+  final case class DecidedChunk(decisions: Array[DecisionRow], lineage: Seq[LineageRow],
+                                scored: Seq[ScoredPair])
 
   /** Per-round slice of the scored-pairs history relevant to this
     * candidate batch: pairs whose sub OR sup label is a candidate mention.
     * The full history stays a parquet-backed DataFrame (it grows without
-    * bound across rounds at corpus scale). A round-sized round collects
-    * this slice ([[priorsByCandidate]]); a larger one attaches it
-    * executor-side via [[candidatesWithPriors]] so it never transits the
-    * driver. */
+    * bound across rounds at corpus scale); each chunk collects only its
+    * own slice ([[priorsByCandidate]]). */
   def priorScoreSlice(candidates: DataFrame, scoredStore: DataFrame): DataFrame = {
     val m = broadcast(candidates.select(col("mention")))
     scoredStore.join(m, scoredStore("subLabel") === m("mention"), "left_semi")
@@ -331,40 +316,17 @@ object KgPipeline {
       .distinct()
   }
 
-  /** Attach each candidate's prior-score slice executor-side (rounds above
-    * [[DriverRows]] candidates): a decide(l)
-    * call only ever queries pairs with l on one side (candidates are
-    * anti-joined against the taxonomy lexical table, so no pair can span
-    * two candidates), so grouping the history by the candidate mention it
-    * touches ships exactly the pairs each task needs — the history stays
-    * distributed end to end, and driver memory no longer scales with the
-    * slice (the round-2 bound this replaces collected it into a broadcast
-    * Map). The join strategy for the mention list is left to AQE: forcing
-    * broadcast() here was itself a driver bound (a 10⁷-candidate list is
-    * a driver-side OOM as a broadcast; AQE picks broadcast from runtime
-    * stats whenever the list actually is small). */
-  def candidatesWithPriors(candidates: DataFrame, scoredStore: DataFrame): DataFrame = {
-    val m = candidates.select(col("mention")).distinct()
-    val subSide = scoredStore.join(m, scoredStore("subLabel") === m("mention"))
-      .select(col("mention"), col("subLabel"), col("supLabel"), col("p"))
-    val supSide = scoredStore.join(m, scoredStore("supLabel") === m("mention"))
-      .select(col("mention"), col("subLabel"), col("supLabel"), col("p"))
-    val sliced = subSide.union(supSide).distinct()
-      .groupBy("mention")
-      .agg(collect_list(struct(col("subLabel"), col("supLabel"), col("p"))).as("priors"))
-    candidates.join(sliced, Seq("mention"), "left_outer")
-  }
-
-  /** A round-sized round's prior slice: one [[priorScoreSlice]] collect,
-    * grouped on the driver by the candidate each pair touches (a pair with
-    * candidates on both sides goes to both, as in [[candidatesWithPriors]]).
-    * Bounded by the round's own pairs: see [[PipelineConfig]]. */
-  private def priorsByCandidate(cands: Array[String],
+  /** A chunk's prior slice: one [[priorScoreSlice]] collect, grouped on the
+    * driver by the candidate each pair touches (a pair with candidates on
+    * both sides goes to both). A decide(l) call only ever queries pairs
+    * with l on one side, so each candidate gets exactly the pairs it
+    * needs. Bounded by the chunk's own pairs: see [[PipelineConfig]]. */
+  private def priorsByCandidate(cands: Seq[String],
                                 scoredStore: DataFrame): Map[String, Seq[ScoredPair]] = {
     import scoredStore.sparkSession.implicits._
     val own = cands.toSet
     val by = mutable.HashMap.empty[String, mutable.ArrayBuffer[ScoredPair]]
-    for (r <- priorScoreSlice(cands.toSeq.toDF("mention"), scoredStore)
+    for (r <- priorScoreSlice(cands.toDF("mention"), scoredStore)
            .select("subLabel", "supLabel", "p").collect()) {
       val p = ScoredPair(r.getString(0), r.getString(1), r.getDouble(2))
       for (m <- Seq(p.subLabel, p.supLabel).distinct if own(m))
@@ -375,15 +337,15 @@ object KgPipeline {
 
   /** What every decide task of a round reads: the broadcast snapshot,
     * models, seed index and lexical table, and the round's settings. */
-  private final case class DecideContext(
+  private[graft] final case class DecideContext(
       round: Int, taxo: Broadcast[MutableTaxo], models: Broadcast[IconModels],
       index: Broadcast[graft.retrieve.SeedSearch], lexical: Broadcast[Map[Long, Long]],
       icon: IconConfig, retrieve: Int, distMode: Boolean)
 
-  /** One decide task, shared by both regimes: `batch` holds (mention,
-    * prior-slice pairs, seeds) rows — seeds only in distributed-retrieval
-    * mode, where null means none. Returns the task's decisions, its
-    * lineage row and the pairs it scored fresh. */
+  /** One decide task: `batch` holds (mention, prior-slice pairs, seeds)
+    * rows, where seeds are read only in distributed-retrieval mode.
+    * Returns the task's decisions, its lineage row and the pairs it scored
+    * fresh. */
   private def decideTask(ctx: DecideContext, batch: Seq[(String, Seq[ScoredPair], Seq[Long])])
       : (Vector[DecisionRow], LineageRow, Seq[ScoredPair]) = {
     val t0 = System.currentTimeMillis()
@@ -392,7 +354,7 @@ object KgPipeline {
     val index = ctx.index.value
     val lexical = ctx.lexical.value
     val cache = new ScoreCache(m.sub)
-    for ((_, priors, _) <- batch; if priors != null)
+    for ((_, priors, _) <- batch)
       cache.importAll(priors.iterator.map(p => (p.subLabel, p.supLabel, p.p)))
     // candidate embeddings in ≤64-label model calls (M1 batch contract;
     // one model invocation per row was a 64× inflation with a real
@@ -405,9 +367,7 @@ object KgPipeline {
       else m.emb.embedBatched(batch.map(_._1)).iterator
     val decisions = batch.iterator.zip(queryVecs).map {
       case ((label, _, seeds), qv) =>
-        val base =
-          if (ctx.distMode) { if (seeds == null) Nil else seeds }
-          else index.search(qv, ctx.retrieve)._2.toSeq
+        val base = if (ctx.distMode) seeds else index.search(qv, ctx.retrieve)._2.toSeq
         val d = IconTraversal.decide(snapshot, label, base, cache, ctx.icon,
           l => lexical.get(Tokenset.hash64(l)))
         DecisionRow(d.label, d.eqv.map(_._1), d.eqv.map(_._2), d.sup, d.sub)
@@ -421,12 +381,12 @@ object KgPipeline {
     (decisions, lineage, cache.exportFresh.map { case (a, b, p) => ScoredPair(a, b, p) })
   }
 
-  /** The round's decide state, shared by both regimes: broadcasts, the
+  /** The round's decide state, shared by all its chunks: broadcasts, the
     * search-space config and the seed source. Returns the context and
     * either the index_build lineage row (broadcast index) or, in
     * distributed-retrieval mode, the frozen RHP center the seeds are
     * probed with. */
-  private def decideSetup(spark: SparkSession, taxo: MutableTaxo, models: IconModels,
+  private[graft] def decideSetup(spark: SparkSession, taxo: MutableTaxo, models: IconModels,
                           cfg: PipelineConfig, round: Int,
                           embCache: graft.retrieve.SnapshotEmbeddings,
                           embStore: DataFrame): (DecideContext, Either[Array[Double], LineageRow]) = {
@@ -547,12 +507,11 @@ object KgPipeline {
   }
 
   /** Distributed-retrieval seeds of the mentions in `labels`: `(mention,
-    * seeds)` rows, unevaluated, and the candidate-vector table they are
-    * computed from. Candidate embeddings are distributed, through the
-    * batch-64 model contract (M1). */
+    * seeds)` rows, unevaluated. Candidate embeddings are distributed,
+    * through the batch-64 model contract (M1). */
   private def retrieveSeeds(spark: SparkSession, ctx: DecideContext, labels: DataFrame,
                             embStore: DataFrame, center: Array[Double],
-                            dim: Int): (DataFrame, DataFrame) = {
+                            dim: Int): DataFrame = {
     import spark.implicits._
     val bModels = ctx.models
     val candVecs = labels.select(col("mention")).as[String]
@@ -560,105 +519,27 @@ object KgPipeline {
         val emb = bModels.value.emb
         it.grouped(64).flatMap(chunk => chunk.iterator.zip(emb.embed(chunk).iterator))
       }.toDF("mention", "qvec")
-    (candVecs, graft.retrieve.DistributedBandedRetrieve.seeds(
-      spark, candVecs, embStore, center, dim, ctx.retrieve))
+    graft.retrieve.DistributedBandedRetrieve.seeds(
+      spark, candVecs, embStore, center, dim, ctx.retrieve)
   }
 
-  /** Stage 3 for a round-sized round (`cfg.maxCandidatesPerRound` ≤
-    * [[DriverRows]]): link + decide over driver-held candidates, each with
-    * its prior-slice pairs ([[priorScoreSlice]] grouped per candidate).
-    * The decide tasks run as ONE plain RDD job of
-    * min(defaultParallelism, n) tasks over `sc.parallelize`, and its
+  /** Stage 3 for one chunk of at most [[DriverRows]] candidates, given as
+    * (mention, prior-slice pairs, seeds) rows: link + decide against the
+    * round's [[DecideContext]]. The decide tasks run as ONE plain RDD job
+    * of min(defaultParallelism, n) tasks over `sc.parallelize`, and its
     * `collect` brings back decisions, lineage and fresh scored pairs — no
-    * Catalyst plan, encoder or shuffle. In distributed-retrieval mode the
-    * seeds come from one collect of the banded cogroup (≤ retrieveSize ids
-    * per candidate) and ride in the same input. */
-  def decideLocal(spark: SparkSession, candidates: Seq[(String, Seq[ScoredPair])],
-                  taxo: MutableTaxo, models: IconModels, cfg: PipelineConfig, round: Int,
-                  embCache: graft.retrieve.SnapshotEmbeddings = null,
-                  embStore: DataFrame = null): LocalRound = {
-    import spark.implicits._
+    * Catalyst plan, encoder or shuffle. */
+  private[graft] def decideChunk(spark: SparkSession, ctx: DecideContext,
+                                 rows: Seq[(String, Seq[ScoredPair], Seq[Long])]): DecidedChunk = {
     val sc = spark.sparkContext
-    val t0 = System.currentTimeMillis()
-    val (ctx, seedSource) = decideSetup(spark, taxo, models, cfg, round, embCache, embStore)
-    val (seeds, indexLineage) = seedSource match {
-      case Right(lineage) => (Map.empty[String, Seq[Long]], lineage)
-      case Left(center) =>
-        val (_, sdf) = retrieveSeeds(spark, ctx, candidates.map(_._1).toDF("mention"),
-          embStore, center, models.emb.dim)
-        val s = sdf.collect().iterator.map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-        (s, LineageRow(round, -1, "retrieve_dist", taxo.numberOfNodes, s.size, 0,
-          System.currentTimeMillis() - t0))
-    }
-    val rows = candidates.iterator.map { case (m, priors) =>
-      (m, priors, seeds.getOrElse(m, Nil))
-    }.toVector
     val parts = sc.parallelize(rows, math.min(sc.defaultParallelism, math.max(1, rows.size)))
       .mapPartitions(it => Iterator(decideTask(ctx, it.toSeq)))
       .collect()
     // a fresh pair has its candidate on one side, so no two tasks export
     // the same pair; the dedupe keeps the store rows identical even if
     // that ever changed
-    LocalRound(parts.flatMap(_._1).sortBy(_.label),
-      parts.iterator.map(_._2).toSeq :+ indexLineage,
+    DecidedChunk(parts.flatMap(_._1).sortBy(_.label), parts.iterator.map(_._2).toSeq,
       parts.iterator.flatMap(_._3).distinctBy(p => (p.subLabel, p.supLabel)).toVector)
-  }
-
-  /** Stage 3 for a round above [[DriverRows]] candidates: link + decide,
-    * executor-side against the broadcast snapshot. `candidates` must carry
-    * the per-mention `priors` column ([[candidatesWithPriors]]) — pass a
-    * null/absent slice as an empty array, never the full history. One
-    * task per candidate partition returns its decisions, one lineage row
-    * and the pairs it scored fresh; the output is cached, and decisions
-    * and pairs stay distributed. */
-  def decideRound(spark: SparkSession, candidates: DataFrame, taxo: MutableTaxo,
-                  models: IconModels, cfg: PipelineConfig, round: Int,
-                  embCache: graft.retrieve.SnapshotEmbeddings = null,
-                  embStore: DataFrame = null,
-                  candLabels: DataFrame = null): DistributedRound = {
-    import spark.implicits._
-    val t0 = System.currentTimeMillis()
-    val (ctx, seedSource) = decideSetup(spark, taxo, models, cfg, round, embCache, embStore)
-    var seedsDF: DataFrame = null
-    var seedRelease: () => Unit = () => ()
-    val indexLineage = seedSource match {
-      case Right(lineage) => lineage
-      case Left(center) =>
-        // embed from the PRE-priors-join mention list when the caller
-        // provides it — selecting mentions out of the joined candidates
-        // would re-execute the O(history) prior-slice join just to list
-        // strings (Spark does not prune a left-outer join from the plan)
-        val (candVecs, sdf) = retrieveSeeds(spark, ctx,
-          if (candLabels != null) candLabels else candidates, embStore, center, models.emb.dim)
-        candVecs.persist()
-        sdf.persist()
-        val nSeeded = sdf.count()
-        seedsDF = sdf
-        seedRelease = () => { sdf.unpersist(); candVecs.unpersist(); () }
-        LineageRow(round, -1, "retrieve_dist", taxo.numberOfNodes, nSeeded, 0,
-          System.currentTimeMillis() - t0)
-    }
-
-    val withPriors =
-      if (candidates.columns.contains("priors")) candidates.select(col("mention"), col("priors"))
-      else candidates.select(col("mention"),
-        lit(null).cast("array<struct<subLabel:string,supLabel:string,p:double>>").as("priors"))
-    val input =
-      (if (seedsDF != null) withPriors.join(seedsDF, Seq("mention"), "left_outer")
-       else withPriors.withColumn("seeds", lit(null).cast("array<bigint>")))
-        .select(col("mention"), col("priors"), col("seeds"))
-        .as[(String, Seq[ScoredPair], Seq[Long])]
-    // scored pairs AND decisions stay distributed (run() spills decisions
-    // to the round's parquet and streams the deterministic commit from a
-    // sorted local iterator — driver memory is bounded by one partition,
-    // not the candidate count); lineage is one row per task, so
-    // collecting it is safe at any scale.
-    val cached = input.mapPartitions(it => Iterator(decideTask(ctx, it.toSeq))).persist()
-    val scoredDF = cached.flatMap(_._3).toDF("subLabel", "supLabel", "p")
-      .groupBy("subLabel", "supLabel").agg(first("p").as("p"))
-    val lineageRows = cached.map(_._2).collect().toSeq :+ indexLineage
-    DistributedRound(cached.flatMap(_._1.iterator), lineageRows, scoredDF,
-      () => { cached.unpersist(); seedRelease() })
   }
 
   /** Commit result: next id-allocator value, inserted-edge provenance
@@ -673,9 +554,8 @@ object KgPipeline {
                           labelFlips: Seq[(Long, Long)])
 
   /** Stage 4: deterministic-order driver commit with cycle screening (P4).
-    * `decisions` must arrive label-sorted (run() streams them from a
-    * sorted parquet iterator — one partition of driver memory, not the
-    * whole round); the Seq overload below sorts for direct callers. */
+    * [[commitStream]] takes `decisions` label-sorted (run() concatenates
+    * its label-ordered chunks); this overload sorts for direct callers. */
   def commit(taxo: MutableTaxo, decisions: Seq[DecisionRow], nextKey0: Long,
              round: Int): CommitResult =
     commitStream(taxo, decisions.sortBy(_.label).iterator, nextKey0, round)
@@ -768,17 +648,8 @@ object KgPipeline {
     }
     import spark.implicits._
     val n = newConcepts.size
-    if (n < 2) {
-      // nothing to merge, but a 1-concept mint still seeds the decide
-      // cache and the embedding store — the zero-repeat-embedding
-      // invariant holds for every round
-      val emb1 = if (newConcepts.isEmpty) Array.empty[Array[Float]]
-        else models.emb.embedBatched(newConcepts.map(_._1))
-      if (preloadWanted(0) && newConcepts.nonEmpty)
-        embCache.preload(newConcepts.map(_._2).toArray, emb1)
-      return CanonResult(Map.empty, Nil, Nil,
-        () => newConcepts.map(_._2).zip(emb1).toDF("vec_id", "embedding"), () => ())
-    }
+    // the driver path also takes 0- and 1-concept mints: a lone mint still
+    // seeds the decide cache and the embedding store
     if (n <= 10000) {
         val ids = newConcepts.map(_._2).toArray
         val emb = sub("canon_embed", n)((models.emb.embedBatched(newConcepts.map(_._1)), n))
@@ -975,7 +846,15 @@ object KgPipeline {
 
   def run(spark: SparkSession, corpus: DataFrame, textCol: String,
           models: IconModels, cfg: PipelineConfig, ckptDir: String,
-          htmlInput: Boolean = false): RunResult = {
+          htmlInput: Boolean = false): RunResult =
+    run(spark, corpus, textCol, models, cfg, ckptDir, htmlInput, DriverRows)
+
+  /** [[run]] with decide chunks of at most `chunkRows` candidates in place
+    * of [[DriverRows]]: a test seam, so that small rounds can decide in
+    * several chunks. */
+  private[graft] def run(spark: SparkSession, corpus: DataFrame, textCol: String,
+                         models: IconModels, cfg: PipelineConfig, ckptDir: String,
+                         htmlInput: Boolean, chunkRows: Int): RunResult = {
     import spark.implicits._
     Files.createDirectories(Paths.get(ckptDir))
 
@@ -1140,8 +1019,8 @@ object KgPipeline {
         else extractMentions(corpus, textCol, cfg.minMentionFreq)
       if (cfg.rounds - resumeRound > 1) m.persist() else m
     }
-    // the slice collect of a round-sized round is skipped while the scored
-    // store has no rows: a fresh run's rounds until one scores a pair
+    // a chunk's slice collect is skipped while the scored store has no
+    // rows: a fresh run's rounds until one scores a pair
     var storeEmpty = resumeRound == 0
 
     val phase = mutable.LinkedHashMap.empty[String, Double]
@@ -1215,77 +1094,98 @@ object KgPipeline {
       val lexHashes =
         (taxo.nodes.map(n => Tokenset.hash64(taxo.getLabel(n))) ++ resolvedHashes).toDF("h")
       val hashUdf = udf((s: String) => Tokenset.hash64(s))
-      def top = mentions.withColumn("h", hashUdf(col("mention")))
+      val top = mentions.withColumn("h", hashUdf(col("mention")))
         .join(lexHashes, Seq("h"), "left_anti")
         .orderBy(col("freq").desc, col("mention").asc)
         .limit(cfg.maxCandidatesPerRound)
-        .select("mention", "freq")
-      val result: RoundResult =
-        if (cfg.maxCandidatesPerRound <= DriverRows) {
-          // round-sized: the candidates and their prior slice come to the
-          // driver in one collect each, and the decide tasks run as one
-          // plain RDD job over them (decideLocal)
-          val cands = timed("candidates")(top.select("mention").collect().map(_.getString(0)))
-          val priors = timed("prior_slice") {
-            if (storeEmpty) Map.empty[String, Seq[ScoredPair]]
-            else priorsByCandidate(cands, scoredStore)
-          }
-          timed("decide")(decideLocal(spark, cands.toSeq.map(m => (m, priors.getOrElse(m, Nil))),
-            taxo, models, cfg, r, embCache, embStore))
-        } else {
-          // limit() collapses downstream parallelism to one task, so the
-          // candidate batch is re-spread by mention hash before the decide
-          // stage
-          val fresh = timed("candidates") {
-            top.repartition(32, col("mention")).localCheckpoint(true)
-          }
-          val withPriors = timed("prior_slice")(candidatesWithPriors(fresh, scoredStore))
-          timed("decide")(decideRound(spark, withPriors, taxo, models, cfg, r, embCache,
-            embStore, candLabels = fresh.select(col("mention"))))
-        }
-      allLineage ++= result.lineage
-      storeEmpty &&= result.lineage.forall(l => l.stage != "decide" || l.scoredPairs == 0)
-
-      // commit source (the §4.5 driver/distributed pattern): a round-sized
-      // round arrives collected and label-sorted. Above DriverRows
-      // candidates the decision count is known from the collected per-task
-      // lineage rows: few decisions are still collected directly, while
-      // big rounds spill to the round's parquet and STREAM the commit from
-      // a sorted local iterator (driver memory = one partition, regardless
-      // of maxCandidatesPerRound; the 10⁶-candidate drive exercises this
-      // path, BENCH/BASELINE.md §9b). Every path feeds identical
-      // label-sorted iterators to commitStream.
+        .select("mention")
       val rd = roundDir(ckptDir, r)
-      val decisionsSorted: () => Iterator[DecisionRow] = result match {
-        case l: LocalRound => () => l.decisions.iterator
-        case d: DistributedRound => timed("decide") {
-          val nDecisions = d.lineage.iterator.filter(_.stage == "decide").map(_.rowsOut).sum
-          if (nDecisions <= DriverRows) {
-            val sorted = d.decisions.collect().sortBy(_.label)
-            () => sorted.iterator
-          } else {
-            d.decisions.write.mode(SaveMode.Overwrite).parquet(s"$rd/decisions")
-            val ds = spark.read.parquet(s"$rd/decisions").as[DecisionRow].orderBy("label")
-            () => ds.toLocalIterator().asScala
-          }
+      // this round has no COMMIT marker: whatever its directory holds was
+      // left by a killed run
+      LocalParquet.deleteTree(Paths.get(rd))
+      // the round's candidate list, computed once. A round that fits one
+      // chunk collects it with one top-k action; a larger round
+      // checkpoints it, so extraction never runs twice, and streams it
+      val oneChunk = cfg.maxCandidatesPerRound <= chunkRows
+      val (collected, checkpointed) = timed("candidates") {
+        if (oneChunk) (top.as[String].collect().sorted, null)
+        else (null, top.localCheckpoint(eager = true))
+      }
+      val t0 = System.currentTimeMillis()
+      val (ctx, seedSource) = timed("decide")(
+        decideSetup(spark, taxo, models, cfg, r, embCache, embStore))
+      // (mention, seeds) rows in mention (= label) order. In
+      // distributed-retrieval mode the seeds come from ONE banded pass over
+      // the round's candidate list and ride in the rows; otherwise each
+      // task searches the broadcast index
+      val rows: Iterator[(String, Seq[Long])] = timed("decide") {
+        seedSource match {
+          case Right(_) =>
+            (if (oneChunk) collected.iterator
+             else checkpointed.orderBy("mention").as[String].toLocalIterator().asScala)
+              .map(m => (m, Nil))
+          case Left(center) =>
+            val cands = if (oneChunk) collected.toSeq.toDF("mention") else checkpointed
+            val seeded = cands.join(
+              retrieveSeeds(spark, ctx, cands, embStore, center, models.emb.dim),
+              Seq("mention"), "left_outer").as[(String, Seq[Long])]
+            (if (oneChunk) seeded.collect().sortBy(_._1).iterator
+             else seeded.orderBy("mention").toLocalIterator().asScala)
+              .map { case (m, seeds) => (m, if (seeds == null) Nil else seeds) }
         }
       }
-      // eqv pairs are captured while the commit stream drains (they are a
-      // tiny fraction of a round) instead of a second full drain — on the
-      // spill path the old second pass re-ran the whole global sort. The
-      // containsNode filter runs AFTER commit, exactly as the two-pass
-      // form did, so the committed-state semantics are unchanged.
-      val eqvSeen = mutable.ArrayBuffer.empty[(String, Long)]
-      val CommitResult(nk, delta, newConcepts, labelFlips) = timed("commit")(
-        commitStream(taxo, decisionsSorted().map { d =>
-          for (e <- d.eqvNode) eqvSeen += ((d.label, e))
-          d
-        }, nextKey, r))
+      val seedMs = System.currentTimeMillis() - t0
+
+      // 3. decide, chunk by chunk. Every chunk decides against the same
+      // frozen snapshot, so the commit starts only after the last one (in
+      // local mode a task's broadcast value IS the driver's taxonomy). A
+      // chunk's decisions come back label-sorted and the chunks are in
+      // label order, so their concatenation is the round's commit order.
+      // Fresh pairs (scored this round, not imported from the prior slice:
+      // ScoreCache.exportFresh) ARE the round's scored-pairs delta, so they
+      // go to disk chunk by chunk, one part file each — the store write
+      // needs no anti-join against history, and the driver holds one
+      // chunk's pairs. Decisions stay on the driver (see PipelineConfig).
+      val decisions = mutable.ArrayBuffer.empty[DecisionRow]
+      val decideLineage = mutable.ArrayBuffer.empty[LineageRow]
+      var nSeeded = 0L
+      val chunks = rows.grouped(chunkRows)
+      var k = 0
+      // an empty round still runs one (empty) decide job
+      while (k == 0 || timed("candidates")(chunks.hasNext)) {
+        val batch = timed("candidates")(if (chunks.hasNext) chunks.next() else Nil)
+        nSeeded += batch.count(_._2.nonEmpty)
+        val priors = timed("prior_slice") {
+          if (storeEmpty) Map.empty[String, Seq[ScoredPair]]
+          else priorsByCandidate(batch.map(_._1), scoredStore)
+        }
+        val out = timed("decide")(decideChunk(spark, ctx,
+          batch.map { case (m, seeds) => (m, priors.getOrElse(m, Nil), seeds) }))
+        for (last <- decisions.lastOption; first <- out.decisions.headOption)
+          require(last.label < first.label,
+            s"decide chunk $k starts at '${first.label}', not after '${last.label}'")
+        decisions ++= out.decisions
+        decideLineage ++= out.lineage
+        timed("checkpoint")(LocalParquet.write(s"$rd/scored_pairs_delta", ScoredPairRows,
+          out.scored.iterator, part = k))
+        k += 1
+      }
+      decideLineage += (seedSource match {
+        case Right(indexBuild) => indexBuild
+        case Left(_) =>
+          LineageRow(r, -1, "retrieve_dist", taxo.numberOfNodes, nSeeded, 0, seedMs)
+      })
+      allLineage ++= decideLineage
+      storeEmpty &&= decideLineage.forall(l => l.stage != "decide" || l.scoredPairs == 0)
+
+      // 4. commit
+      val CommitResult(nk, delta, newConcepts, labelFlips) =
+        timed("commit")(commitStream(taxo, decisions.iterator, nextKey, r))
       nextKey = nk
       allDeltas ++= delta
       timed("commit") {
-        for ((l, e) <- eqvSeen if taxo.containsNode(e))
-          sameAs += ((l, taxo.getLabel(e), r))
+        for (d <- decisions; e <- d.eqvNode if taxo.containsNode(e))
+          sameAs += ((d.label, taxo.getLabel(e), r))
       }
 
       // once the NEXT round's decide will retrieve distributed, the driver
@@ -1330,9 +1230,8 @@ object KgPipeline {
           .toSeq.distinct
           .filter { case (u, v) => taxo.containsEdge(u, v) }
           .map { case (u, v) => (u, v, taxo.succ(u)(v)) }
-        // Spark writes (compaction snapshots, a distributed round's scored
-        // pairs, the embedding store) are INDEPENDENT jobs gated by the one COMMIT
-        // marker written last, so they are submitted from a driver thread
+        // Spark writes (compaction snapshots, the embedding store) are
+        // INDEPENDENT jobs gated by the one COMMIT marker written last, so they are submitted from a driver thread
         // pool and awaited before the marker (optimization guide §2.6:
         // actions are only sequential because the driver calls them
         // sequentially); a failure in ANY write propagates out of the
@@ -1349,7 +1248,7 @@ object KgPipeline {
           try pendingWrites.foreach(f =>
             scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
           finally { pendingWrites.clear() }
-        val compact = cfg.compactEvery > 0 && r % cfg.compactEvery == 0
+        val compact = r % cfg.compactEvery == 0
         if (compact) {
           // compaction: partitioned full-snapshot write (the old per-round
           // coalesce(1) rewrite was a single-task serial term at 2M nodes),
@@ -1364,24 +1263,16 @@ object KgPipeline {
               .toDF("seq", "src", "dst", "label")
               .repartition(nParts).write.mode(SaveMode.Overwrite).parquet(s"$rd/edges"))
         }
-        // scored-pairs store: fresh pairs only per round. decide exports
-        // ONLY pairs it scored this round (ScoreCache.exportFresh — pairs
-        // imported from the prior slice are excluded executor-side), so the
-        // round's pairs ARE the history-fresh delta and the store write is
-        // O(delta) with no shuffle of the history at all. (The r4 form
-        // anti-joined them against the full store here — an O(history)
-        // shuffle every round, 64.9 s of the §9g drive's checkpoint wall.)
-        val pairsTable = if (compact) "scored_pairs" else "scored_pairs_delta"
-        result match {
-          case l: LocalRound if !compact => LocalParquet.writeRows(s"$rd/$pairsTable", l.scored)
-          case _ =>
-            val fresh = result match {
-              case l: LocalRound => l.scored.toDF()
-              case d: DistributedRound => d.scored
-            }
-            pendingWrites += bg((if (compact) scoredStore.union(fresh) else fresh)
-              .write.mode(SaveMode.Overwrite).parquet(s"$rd/$pairsTable"))
-        }
+        // scored-pairs store: the round's fresh pairs are on disk already
+        // (scored_pairs_delta, written chunk by chunk), so the per-round
+        // store write is O(delta) with no shuffle of the history at all.
+        // (The r4 form anti-joined them against the full store here — an
+        // O(history) shuffle every round, 64.9 s of the §9g drive's
+        // checkpoint wall.) A compaction round also writes the full store.
+        if (compact)
+          pendingWrites += bg(scoredStore
+            .union(spark.read.schema(ScoredPairSchema).parquet(s"$rd/scored_pairs_delta"))
+            .write.mode(SaveMode.Overwrite).parquet(s"$rd/scored_pairs"))
         // embedding store (at-scale decide path): this round's merge
         // SURVIVORS are the per-round delta; a full store snapshot is
         // written on the crossover round (first build) and on compaction
@@ -1414,7 +1305,7 @@ object KgPipeline {
           LocalParquet.writeRows(s"$rd/edges_delta",
             edgeAdds.zipWithIndex.map { case ((u, v, l), k) => (k.toLong, u, v, l) },
             "seq", "src", "dst", "label")
-          LocalParquet.writeRows(s"$rd/lineage", result.lineage ++ canonRes.lineage)
+          LocalParquet.writeRows(s"$rd/lineage", decideLineage.toSeq ++ canonRes.lineage)
           // cumulative provenance (bounded by inserted edges — at the §9b
           // drive it reaches 2M rows): lets a resumed run reconstruct
           // src_round exactly
@@ -1425,7 +1316,6 @@ object KgPipeline {
         } finally ckptPool.shutdown()
         // post-write state swaps + cache releases (read-back depends on the
         // completed writes)
-        result.release()
         scoredStore =
           if (compact) spark.read.parquet(s"$rd/scored_pairs")
           else scoredStore.union(

@@ -16,7 +16,7 @@ import scala.reflect.runtime.universe.TypeTag
 
 /** Driver-side parquet writer for driver-resident tables of flat rows
   * (Long, Int, Double and String columns): one snappy file per table
-  * directory, no Spark job. A round-sized checkpoint table is a few hundred
+  * directory, or one per part for a table written in parts; no Spark job. A round-sized checkpoint table is a few hundred
   * rows, where a Spark write is almost all job-launch and output-committer
   * latency; at millions of rows a Spark write of a local Seq still pays for
   * the copy into a LocalRelation, which this writer streams past.
@@ -24,7 +24,8 @@ import scala.reflect.runtime.universe.TypeTag
   * (nullable columns optional, the rest required; strings as UTF-8
   * binary), so `spark.read.parquet` sees the same column names and types.
   * Like `SaveMode.Overwrite`, a write replaces whatever the directory held;
-  * atomicity comes from the caller's commit marker, not from the write. */
+  * a table written in parts replaces it with its first part. Atomicity
+  * comes from the caller's commit marker, not from the write. */
 object LocalParquet {
 
   private val conf = new Configuration(false)
@@ -43,13 +44,16 @@ object LocalParquet {
   def writeRows[T <: Product : TypeTag](dir: String, rows: Seq[T], cols: String*): Unit =
     write(dir, schemaOf[T](cols: _*), rows.iterator)
 
-  /** Writes `rows` (one product per row, fields in schema order) as the
-    * single part file of directory `dir`. */
-  def write(dir: String, schema: StructType, rows: Iterator[Product]): Unit = {
+  /** Writes `rows` (one product per row, fields in schema order) as part
+    * file `part` of directory `dir`. Part 0 first clears the directory, so
+    * a table written as parts 0, 1, ... holds exactly those parts. */
+  def write(dir: String, schema: StructType, rows: Iterator[Product], part: Int = 0): Unit = {
     val d = Paths.get(dir)
-    deleteTree(d)
-    Files.createDirectories(d)
-    val w = new Builder(new LocalOutputFile(d.resolve("part-00000.snappy.parquet")), schema)
+    if (part == 0) {
+      deleteTree(d)
+      Files.createDirectories(d)
+    }
+    val w = new Builder(new LocalOutputFile(d.resolve(f"part-$part%05d.snappy.parquet")), schema)
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
@@ -57,7 +61,7 @@ object LocalParquet {
     try rows.foreach(w.write) finally w.close()
   }
 
-  private def deleteTree(p: Path): Unit =
+  private[pipeline] def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))

@@ -151,22 +151,22 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("decide stage embeds through the batch-64 model contract (M1)") {
-    import spark.implicits._
     val taxo = KgPipeline.seedTaxo()
     val models = KgPipeline.domainModels()
       .copy(emb = new CountingEmbedder(new HashNgramEmbedder(64)))
-    val cands = (1 to 200).map(i => (s"cand$i label", 5L))
-      .toDF("mention", "freq").repartition(1)
+    val cands = (1 to 200).map(i => (s"cand$i label", Seq.empty[KgPipeline.ScoredPair], Nil))
     CountingEmbedder.reset()
-    val res = KgPipeline.decideRound(spark, cands, taxo, models,
-      KgPipeline.PipelineConfig(), 1)
-    res.release()
+    val (ctx, _) = KgPipeline.decideSetup(spark, taxo, models,
+      KgPipeline.PipelineConfig(), 1, null, null)
+    val res = KgPipeline.decideChunk(spark, ctx, cands)
+    assert(res.decisions.length == 200)
     val calls = CountingEmbedder.calls.get()
     val labs = CountingEmbedder.labels.get()
     // all 200 candidates + the snapshot were embedded...
     assert(labs >= 200L + taxo.numberOfNodes, s"labels=$labs")
-    // ...but in ≤64-label chunks: ceil(200/64) + 1 snapshot call (+ noise),
-    // NOT one call per candidate (the round-3 embedOne-per-row bug)
+    // ...but in ≤64-label chunks: one call per task (4 tasks of 50 at
+    // local[4]) + 1 snapshot call, NOT one call per candidate (the round-3
+    // embedOne-per-row bug)
     assert(calls <= 8, s"embedder invoked $calls times for $labs labels")
   }
 
@@ -313,6 +313,12 @@ class PipelineSpec extends SparkSpecBase {
     val r2 = KgPipeline.run(spark, corpus(300, 7), "text", KgPipeline.domainModels(), dcfg(2), c2)
     assert(rows(r1.triples) == rows(r2.triples), "distributed decide must be deterministic")
     assert(rows(r1.triples).nonEmpty)
+    // chunks of 7: the streamed candidate list carries the round's seeds
+    val c3 = Files.createTempDirectory("kgd3").toString
+    val r3 = KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(), dcfg(2), c3,
+      htmlInput = false, 7)
+    assert(rows(r3.triples) == rows(r1.triples), "chunked distributed decide")
+    assert(r3.lineage.filter(col("stage") === "retrieve_dist").count() == 2)
     // kill after round 1 → resume: the store + frozen center reload from
     // the checkpoint and the result is full-row identical
     KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(), dcfg(1), part)
@@ -528,59 +534,72 @@ class PipelineSpec extends SparkSpecBase {
     for (n <- t.nodes) assert(!t.getAncestors(n).contains(n), s"cycle at $n")
   }
 
-  /** Runs `c` once round-sized (one collected round, decideLocal) and once
-    * distributed (a cached round with shuffled scored pairs, decideRound)
-    * and checks that both write the same triples and checkpoint tables in
-    * every round. Returns the round-sized run's directory and result. */
-  private def regimesAgree(c: KgPipeline.PipelineConfig, corp: org.apache.spark.sql.DataFrame,
-                           name: String): (String, KgPipeline.RunResult) = {
+  /** Runs `c` with decide chunks of 1 and 7 candidates and with whole
+    * rounds (chunks of [[KgPipeline.DriverRows]]: one collected chunk), and
+    * checks that all three write the same triples and checkpoint tables in
+    * every round, and that every chunk runs min(defaultParallelism, n)
+    * decide tasks. Returns the whole-round run's directory and result. */
+  private def chunkSizesAgree(c: KgPipeline.PipelineConfig, corp: org.apache.spark.sql.DataFrame,
+                              name: String): (String, KgPipeline.RunResult) = {
     import spark.implicits._
-    val local = Files.createTempDirectory(s"${name}_local").toString
-    val dist = Files.createTempDirectory(s"${name}_dist").toString
-    def go(maxCands: Int, dir: String) = KgPipeline.run(spark, corp, "text",
-      KgPipeline.domainModels(), c.copy(maxCandidatesPerRound = maxCands), dir)
-    val rLocal = go(KgPipeline.DriverRows, local)
-    val rDist = go(KgPipeline.DriverRows + 1, dist)
+    val runs = Seq(1, 7, KgPipeline.DriverRows).map { k =>
+      val dir = Files.createTempDirectory(s"${name}_$k").toString
+      (k, dir, KgPipeline.run(spark, corp, "text", KgPipeline.domainModels(),
+        c.copy(maxCandidatesPerRound = KgPipeline.DriverRows), dir, htmlInput = false, k))
+    }
+    val (_, whole, rWhole) = runs.last
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    assert(rows(rLocal.triples) == rows(rDist.triples))
-    assert(rows(rLocal.triples).nonEmpty)
-    for (r <- 1 to c.rounds; t <- Seq("nodes_delta", "edges_delta", "scored_pairs_delta",
-                                      "deltas", "sameas")) {
-      val a = spark.read.parquet(s"$local/round=$r/$t")
-      val b = spark.read.parquet(s"$dist/round=$r/$t")
-      assert(a.schema == b.schema, s"round $r $t schema")
-      assert(rows(a) == rows(b), s"round $r $t rows")
+    assert(rows(rWhole.triples).nonEmpty)
+    assert(rows(spark.read.parquet(s"$whole/triples")) == rows(rWhole.triples))
+    for ((k, dir, res) <- runs.init) {
+      assert(rows(res.triples) == rows(rWhole.triples), s"chunk $k triples")
+      for (r <- 1 to c.rounds; t <- Seq("nodes_delta", "edges_delta", "scored_pairs_delta",
+                                        "deltas", "sameas")) {
+        val a = spark.read.parquet(s"$whole/round=$r/$t")
+        val b = spark.read.parquet(s"$dir/round=$r/$t")
+        assert(a.schema == b.schema, s"chunk $k round $r $t schema")
+        assert(rows(a) == rows(b), s"chunk $k round $r $t rows")
+      }
     }
-    assert(rows(spark.read.parquet(s"$local/triples")) == rows(rLocal.triples))
-    // the regimes split a round into different tasks (round-sized:
-    // min(defaultParallelism, n); distributed: 32), so their decide
-    // lineage agrees in per-round totals of rowsIn, rowsOut, scoredPairs
+    // decide lineage in run order, where a chunk's tasks are partitions
+    // 0, 1, ...: every run has the same per-round totals, chunk sizes are
+    // k, ..., k, rest, and each chunk runs min(defaultParallelism, n) tasks
     def decideRows(res: KgPipeline.RunResult) =
       res.lineage.filter($"stage" === "decide")
-        .select("round", "rowsIn", "rowsOut", "scoredPairs")
-        .as[(Int, Long, Long, Long)].collect().toSeq.groupBy(_._1)
-    def totals(res: KgPipeline.RunResult) = decideRows(res).map { case (r, xs) =>
-      r -> (xs.map(_._2).sum, xs.map(_._3).sum, xs.map(_._4).sum) }
-    assert(totals(rLocal) == totals(rDist))
-    assert(totals(rLocal).keySet == (1 to c.rounds).toSet)
-    val dp = spark.sparkContext.defaultParallelism
-    for ((r, xs) <- decideRows(rLocal)) {
-      val n = xs.map(_._2).sum
-      assert(xs.size == math.min(dp.toLong, math.max(1L, n)),
-        s"round $r: ${xs.size} decide tasks for $n candidates")
+        .select("round", "partitionId", "rowsIn", "rowsOut", "scoredPairs")
+        .as[(Int, Int, Long, Long, Long)].collect().toSeq
+    def totals(res: KgPipeline.RunResult) = decideRows(res).groupBy(_._1).map { case (r, xs) =>
+      r -> (xs.map(_._3).sum, xs.map(_._4).sum, xs.map(_._5).sum) }
+    assert(totals(rWhole).keySet == (1 to c.rounds).toSet)
+    val dp = spark.sparkContext.defaultParallelism.toLong
+    for ((k, _, res) <- runs) {
+      assert(totals(res) == totals(rWhole), s"chunk $k decide totals")
+      for (r <- 1 to c.rounds) {
+        val xs = decideRows(res).filter(_._1 == r)
+        val chunks = xs.foldLeft(Vector.empty[Vector[Long]]) { (acc, x) =>
+          if (x._2 == 0) acc :+ Vector(x._3) else acc.init :+ (acc.last :+ x._3)
+        }
+        val n = xs.map(_._3).sum
+        val sizes =
+          if (n == 0) Seq(0L) else Seq.fill((n / k).toInt)(k.toLong) ++ Seq(n % k).filter(_ > 0)
+        assert(chunks.map(_.sum) == sizes, s"chunk $k round $r chunk sizes")
+        for (ch <- chunks)
+          assert(ch.size == math.min(dp, math.max(1L, ch.sum)),
+            s"chunk $k round $r: ${ch.size} decide tasks for ${ch.sum} candidates")
+      }
     }
-    (local, rLocal)
+    (whole, rWhole)
   }
 
-  test("round-sized and distributed decide rounds write the same checkpoint and triples") {
-    // every candidate of this corpus fits either bound, so the two configs
-    // admit the same candidates
-    val (local, _) = regimesAgree(cfg(2), corpus(300, 4), "kgreg")
-    assert(spark.read.parquet(s"$local/round=1/scored_pairs_delta").count() > 0)
+  test("decide chunks of 1, 7 and a whole round write the same checkpoint and triples") {
+    // every candidate of this corpus fits the DriverRows cap, so each
+    // chunk size decides the same candidates
+    val (whole, _) = chunkSizesAgree(cfg(2), corpus(300, 4), "kgreg")
+    assert(spark.read.parquet(s"$whole/round=1/scored_pairs_delta").count() > 0)
   }
 
-  test("round-sized and distributed rounds agree on a round with a non-empty prior slice") {
+  test("decide chunks of 1, 7 and a whole round agree on a non-empty prior slice") {
     import spark.implicits._
     // one retrieval seed crops each search space to the seed's subtree, so
     // round 1 places "batch query" and rejects the other mentions (no eqv,
@@ -589,7 +608,7 @@ class PipelineSpec extends SparkSpecBase {
     val c = cfg(2).copy(retrieveSize = 1)
     val corp = Seq("batch query", "tabled rowing", "hashing keying", "joiner sorter",
       "scanner filterer").flatMap(Seq.fill(3)(_)).toDF("text")
-    val (local, rLocal) = regimesAgree(c, corp, "kgslice")
+    val (local, rLocal) = chunkSizesAgree(c, corp, "kgslice")
     // round 2's candidates, recomputed: every mention that is neither a
     // label of the round-1 taxonomy nor resolved by a round-1 sameAs
     val seed = KgPipeline.seedTaxo()
@@ -610,6 +629,72 @@ class PipelineSpec extends SparkSpecBase {
     def pairs(r: Int) = spark.read.parquet(s"$local/round=$r/scored_pairs_delta")
       .select("subLabel", "supLabel").as[(String, String)].collect().toSet
     assert(pairs(1).intersect(pairs(2)).isEmpty)
+  }
+
+  test("decide chunks of 1 see the frozen snapshot, as one whole-round chunk") {
+    import spark.implicits._
+    // a non-strict search space also holds nodes off the seeds' paths, so
+    // a node committed earlier in the round is visible to a later mention:
+    // had "big join" (first in label order) landed before "big operation"
+    // decided, the latter would take it as a sub
+    val c = cfg(1).copy(icon = cfg(1).icon.copy(subgraphStrict = false))
+    val corp = (Seq.fill(4)("big join") ++ Seq.fill(3)("big operation")).toDF("text")
+    def triples(res: KgPipeline.RunResult) =
+      res.triples.select("subj", "pred", "obj", "src_round", "lineage")
+        .as[(String, String, String, Int, String)].collect().toSet
+    val bigJoinUnderBigOp = ("big join", "isA", "big operation")
+    // the corpus is order-sensitive: one mention per round, so "big
+    // operation" decides after "big join" has committed
+    val seqRes = KgPipeline.run(spark, corp, "text", KgPipeline.domainModels(),
+      c.copy(rounds = 2, maxCandidatesPerRound = 1),
+      Files.createTempDirectory("kgfrozen_seq").toString)
+    assert(triples(seqRes).exists(t => (t._1, t._2, t._3) == bigJoinUnderBigOp))
+    val whole = Files.createTempDirectory("kgfrozen_whole").toString
+    val one = Files.createTempDirectory("kgfrozen_one").toString
+    val rWhole = KgPipeline.run(spark, corp, "text", KgPipeline.domainModels(), c, whole,
+      htmlInput = false, KgPipeline.DriverRows)
+    val rOne = KgPipeline.run(spark, corp, "text", KgPipeline.domainModels(), c, one,
+      htmlInput = false, 1)
+    assert(!triples(rWhole).exists(t => (t._1, t._2, t._3) == bigJoinUnderBigOp))
+    assert(triples(rOne) == triples(rWhole))
+    val decided = rOne.lineage.filter($"stage" === "decide").select("rowsIn").as[Long].collect()
+    assert(decided.toSeq == Seq(1L, 1L), s"one task per one-mention chunk: ${decided.toSeq}")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    for (t <- Seq("nodes_delta", "edges_delta", "scored_pairs_delta", "deltas", "sameas"))
+      assert(rows(spark.read.parquet(s"$one/round=1/$t")) ==
+        rows(spark.read.parquet(s"$whole/round=1/$t")), t)
+  }
+
+  test("resume over a killed round's leftover parts equals the uninterrupted run") {
+    import spark.implicits._
+    import java.nio.file.{Paths => JPaths, StandardCopyOption}
+    val full = Files.createTempDirectory("kgkill_full").toString
+    val part = Files.createTempDirectory("kgkill_part").toString
+    val rFull = KgPipeline.run(spark, corpus(300, 4), "text",
+      KgPipeline.domainModels(), cfg(2), full)
+    KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(), cfg(1), part)
+    // what a run killed in round 2 leaves: a fresh-pairs part beyond the
+    // ones the resumed round writes, and an older binary's decisions
+    // spill, with no COMMIT marker
+    val rd = s"$part/round=2"
+    Files.createDirectories(JPaths.get(s"$rd/scored_pairs_delta"))
+    Files.copy(JPaths.get(s"$part/round=1/scored_pairs_delta/part-00000.snappy.parquet"),
+      JPaths.get(s"$rd/scored_pairs_delta/part-00042.snappy.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    Seq(KgPipeline.DecisionRow("stale label", None, None, Seq((1L, 0.9)), Nil)).toDS()
+      .write.parquet(s"$rd/decisions")
+    assert(KgPipeline.lastCompleteRound(part) == 1)
+    // the resumed round decides in chunks of 7, so it writes several parts
+    val rResumed = KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(),
+      cfg(2), part, htmlInput = false, 7)
+    assert(rResumed.roundsRun == 1)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(rResumed.triples) == rows(rFull.triples))
+    for (t <- Seq("nodes_delta", "edges_delta", "scored_pairs_delta", "deltas", "sameas"))
+      assert(rows(spark.read.parquet(s"$rd/$t")) ==
+        rows(spark.read.parquet(s"$full/round=2/$t")), t)
   }
 
   test("a round-sized round's checkpoint phase starts no Spark job") {
