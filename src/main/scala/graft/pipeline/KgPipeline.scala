@@ -7,7 +7,7 @@ import graft.retrieve.VectorIndex
 import graft.spark.GraphOps
 import graft.taxo.{CycleException, MutableTaxo}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -27,9 +27,10 @@ import scala.jdk.CollectionConverters._
   *      chunks of at most [[DriverRows]] candidates, taken in mention
   *      (= label) order. A round that fits one chunk collects its
   *      candidates in one action; a larger one checkpoints the list once
-  *      and streams it. Each chunk slices the scored-pairs history down to
-  *      the pairs touching its candidates (sub-score cache M4) in one
-  *      collect, skipped while the scored store is empty.
+  *      and streams it. The round slices the scored-pairs history down to
+  *      the pairs touching its candidates (sub-score cache M4) in one store
+  *      pass, skipped while the scored store is empty: one collect for a
+  *      one-chunk round, a join onto the streamed list for a larger one.
   *   3. LINK + DECIDE — one task per candidate batch embeds its batch,
   *      kNN-retrieves bases from the broadcast index (ICON manual mode
   *      with auto_bases, icon.py:515-556), and runs the enhanced traversal
@@ -42,12 +43,12 @@ import scala.jdk.CollectionConverters._
   *      screening; new ids allocated densely from max(id)+1.
   *   5. CANONICALIZE — equivalence pairs (eqv decisions + embedding
   *      near-dups among new concepts) → connected components → merge.
-  *   6. CHECKPOINT — nodes/edges/scored-pairs/lineage parquet per round +
-  *      COMMIT marker: the run is resumable from the last complete round.
-  *      Tables built on the driver (deltas, lineage, provenance, and the
-  *      fresh scored pairs, one part file per chunk) are written by the
-  *      driver ([[LocalParquet]], no Spark job); compaction snapshots and
-  *      distributed data by Spark.
+  *   6. CHECKPOINT — the round's additive deltas (nodes, edges, fresh
+  *      scored pairs, embedding-store survivors), its provenance and a
+  *      COMMIT marker, with full snapshots every `compactEvery` rounds:
+  *      the run resumes from the last complete round. [[Checkpoint]] owns
+  *      the layout; resume and the live run read the stores through its
+  *      one base-plus-deltas rule.
   *
   * The corpus is the distributed axis; the taxonomy is broadcast-sized
   * (reference scale: ≤ ~10^6 concepts). Decisions within a round share the
@@ -72,9 +73,10 @@ object KgPipeline {
       // snapshot the chunk is 1.1M pairs, ~156 MB of pairs and ~16 MB of
       // decisions, from a 58 MB serialized result
       // (spark.driver.maxResultSize defaults to 1 GB). The chunk's prior
-      // slice is collected too, and is of the same order: its pairs are
-      // the ones its candidates scored in earlier rounds, so ≈11 pairs per
-      // candidate, ~1.1M pairs per full chunk. Fresh pairs go to disk chunk
+      // slice is on the driver too (collected for a one-chunk round,
+      // streamed in the candidate rows for a larger one) and of the same
+      // order: its pairs are the ones its candidates scored in earlier
+      // rounds, so ≈11 pairs per candidate, ~1.1M pairs per full chunk. Fresh pairs go to disk chunk
       // by chunk, so at any cap the driver holds one chunk's pairs.
       // Decisions stay on the driver until the round commits: ~161 B each
       // by SizeEstimator (3.2 MB for 20000 rand50k-mention decisions
@@ -109,10 +111,10 @@ object KgPipeline {
       // rounds write only the round's (purely additive) deltas — the
       // per-round checkpoint cost tracks the delta, not the snapshot (a
       // 2M-row coalesce(1) rewrite per round was 63 s of the §9b drive's
-      // wall). Must be ≥ 1: compaction also bounds the live scored-store
-      // union chain (≤ k branches before a full rewrite resets it), so
-      // "never compact" would grow the plan without bound. k = 1 restores
-      // the round-3 full-rewrite-every-round behavior.
+      // wall). Must be ≥ 1: compaction also bounds the number of delta
+      // dirs a store read lists (≤ k after the last snapshot), so "never
+      // compact" would grow every store read without bound. k = 1 writes
+      // full snapshots every round.
       compactEvery: Int = 8,
       // optional category-move pass (C1-C9) over the finished taxonomy:
       // concepts minted from the mention stream are re-examined and
@@ -279,13 +281,6 @@ object KgPipeline {
                         rowsIn: Long, rowsOut: Long, scoredPairs: Long, wallMs: Long)
   case class ScoredPair(subLabel: String, supLabel: String, p: Double)
 
-  /** Schema of a scored-pairs table as the driver writes it, and the read
-    * schema: passing the latter skips the schema inference job a bare
-    * `spark.read.parquet` runs. */
-  private val ScoredPairRows = LocalParquet.schemaOf[ScoredPair]()
-  private val ScoredPairSchema = org.apache.spark.sql.types.StructType(
-    ScoredPairRows.map(_.copy(nullable = true)))
-
   /** Local property naming the `run` phase (candidates, decide, commit,
     * checkpoint, ...) that started a Spark job; listeners read it from
     * the job's properties. */
@@ -307,8 +302,8 @@ object KgPipeline {
   /** Per-round slice of the scored-pairs history relevant to this
     * candidate batch: pairs whose sub OR sup label is a candidate mention.
     * The full history stays a parquet-backed DataFrame (it grows without
-    * bound across rounds at corpus scale); each chunk collects only its
-    * own slice ([[priorsByCandidate]]). */
+    * bound across rounds at corpus scale); a round collects only its own
+    * slice ([[priorsByCandidate]]). */
   def priorScoreSlice(candidates: DataFrame, scoredStore: DataFrame): DataFrame = {
     val m = broadcast(candidates.select(col("mention")))
     scoredStore.join(m, scoredStore("subLabel") === m("mention"), "left_semi")
@@ -316,9 +311,9 @@ object KgPipeline {
       .distinct()
   }
 
-  /** A chunk's prior slice: one [[priorScoreSlice]] collect, grouped on the
-    * driver by the candidate each pair touches (a pair with candidates on
-    * both sides goes to both). A decide(l) call only ever queries pairs
+  /** A one-chunk round's prior slice: one [[priorScoreSlice]] collect,
+    * grouped on the driver by the candidate each pair touches (a pair with
+    * candidates on both sides goes to both). A decide(l) call only ever queries pairs
     * with l on one side, so each candidate gets exactly the pairs it
     * needs. Bounded by the chunk's own pairs: see [[PipelineConfig]]. */
   private def priorsByCandidate(cands: Seq[String],
@@ -334,6 +329,17 @@ object KgPipeline {
     }
     by.view.mapValues(_.toSeq).toMap
   }
+
+  /** The prior slice of a whole candidate list in one store pass:
+    * (mention, priors) rows for the candidates with at least one prior
+    * pair — the pairs [[priorsByCandidate]] gives each candidate, as a
+    * DataFrame whose rows can ride in a streamed candidate list. */
+  private def priorsByMention(cands: DataFrame, scoredStore: DataFrame): DataFrame =
+    scoredStore
+      .select(explode(array_distinct(array(col("subLabel"), col("supLabel")))).as("mention"),
+        struct(col("subLabel"), col("supLabel"), col("p")).as("pair"))
+      .join(broadcast(cands.select(col("mention"))), "mention")
+      .groupBy("mention").agg(collect_set(col("pair")).as("priors"))
 
   /** What every decide task of a round reads: the broadcast snapshot,
     * models, seed index and lexical table, and the round's settings. */
@@ -553,13 +559,9 @@ object KgPipeline {
                           newConcepts: Seq[(String, Long)],
                           labelFlips: Seq[(Long, Long)])
 
-  /** Stage 4: deterministic-order driver commit with cycle screening (P4).
-    * [[commitStream]] takes `decisions` label-sorted (run() concatenates
-    * its label-ordered chunks); this overload sorts for direct callers. */
-  def commit(taxo: MutableTaxo, decisions: Seq[DecisionRow], nextKey0: Long,
-             round: Int): CommitResult =
-    commitStream(taxo, decisions.sortBy(_.label).iterator, nextKey0, round)
-
+  /** Stage 4: deterministic-order driver commit with cycle screening (P4),
+    * over `decisions` label-sorted (run() concatenates its label-ordered
+    * chunks). */
   def commitStream(taxo: MutableTaxo, decisions: Iterator[DecisionRow], nextKey0: Long,
                    round: Int): CommitResult = {
     var nextKey = nextKey0
@@ -601,13 +603,10 @@ object KgPipeline {
     * delta needs them), and per-sub-phase lineage rows (the §9g drive
     * showed canonicalize as 47% of the 2-round wall with no breakdown —
     * stages: canon_embed / canon_pairs / canon_cc / canon_preload /
-    * canon_apply; the driver path fuses pairs+cc into canon_cc). */
-  /** `survivorVecs` builds the round's (vec_id, embedding) table of mints
-    * that SURVIVED the merge — the per-round delta of the distributed
-    * embedding store (the at-scale decide path retrieves seeds from that
-    * store, so the checkpoint persists it like nodes/edges; rounds are
-    * purely additive, merges only ever remove same-round mints). Only a
-    * run with an embedding store calls it. Call `release` after the
+    * canon_apply; the driver path fuses pairs+cc into canon_cc).
+    * `survivorVecs` builds the round's (vec_id, embedding) table of mints
+    * that SURVIVED the merge, the round's delta of the embedding store;
+    * only a run with an embedding store calls it, and `release` after the
     * checkpoint has written it. */
   case class CanonResult(merge: Map[Long, Long],
                          addedEdges: Seq[(Long, Long, String)],
@@ -765,11 +764,6 @@ object KgPipeline {
     * per-round mint is bounded by maxCandidatesPerRound; a Spark job per
     * few hundred driver-resident labels is pure scheduling overhead).
     * Same semantics: exact cosine pairs ≥ threshold, union-find to min id. */
-  def canonicalizeLocal(newConcepts: Seq[(String, Long)],
-                        models: IconModels, threshold: Double): Map[Long, Long] =
-    canonicalizeLocal(newConcepts.map(_._2).toArray,
-      models.emb.embedBatched(newConcepts.map(_._1)), threshold)
-
   private def canonicalizeLocal(ids: Array[Long], emb: Array[Array[Float]],
                                 threshold: Double): Map[Long, Long] =
     // one union-find implementation (GraphOps, shared with the Spark
@@ -834,15 +828,8 @@ object KgPipeline {
   case class RunResult(taxo: MutableTaxo, triples: DataFrame, lineage: DataFrame,
                        roundsRun: Int)
 
-  private def roundDir(ckpt: String, r: Int) = s"$ckpt/round=$r"
-  private def commitMarker(ckpt: String, r: Int) = Paths.get(s"${roundDir(ckpt, r)}/COMMIT")
-
-  /** Find the last complete round in a checkpoint dir (resume point). */
-  def lastCompleteRound(ckpt: String): Int = {
-    var r = 0
-    while (Files.exists(commitMarker(ckpt, r + 1))) r += 1
-    r
-  }
+  /** The last complete round of a checkpoint dir (the resume point). */
+  def lastCompleteRound(ckpt: String): Int = Checkpoint.lastCompleteRound(ckpt)
 
   def run(spark: SparkSession, corpus: DataFrame, textCol: String,
           models: IconModels, cfg: PipelineConfig, ckptDir: String,
@@ -858,12 +845,6 @@ object KgPipeline {
     import spark.implicits._
     Files.createDirectories(Paths.get(ckptDir))
 
-    // resume from the last complete round, or start at the seed. Round
-    // checkpoints are per-round DELTAS (rounds are purely additive: merges
-    // only ever remove same-round mints, so net change = added nodes +
-    // added edges) with a full snapshot every cfg.compactEvery rounds —
-    // resume loads the latest compaction at or before the resume point and
-    // replays the delta rounds after it.
     // parse the crash-injection env ONCE at startup: a typo'd value used
     // to throw NumberFormatException only at the END of the first round,
     // after a full round of work
@@ -878,140 +859,29 @@ object KgPipeline {
       s"checkpoint at $ckptDir has $resumeRound complete rounds but " +
         s"cfg.rounds=${cfg.rounds} — pass rounds >= $resumeRound (a re-run " +
         "over a completed checkpoint replays it; extra rounds extend it)")
-    // latest full-snapshot compaction at or before the resume point (0 =
-    // none: replay every delta from the seed) — shared by the taxonomy
-    // and the scored-pairs store, which compact together
-    val baseRound =
-      if (resumeRound == 0) 0
-      else (resumeRound to 1 by -1)
-        .find(i => Files.exists(Paths.get(s"${roundDir(ckptDir, i)}/nodes")))
-        .getOrElse(0)
-    var taxo =
-      if (resumeRound == 0) seedTaxo()
-      else {
-        // every checkpointed row carries its `seq` insertion index — the
-        // replay sorts on it so the reconstructed LinkedHashMaps have the
-        // live run's EXACT insertion order (adjacency iteration order is
-        // decision-relevant, MutableTaxo scaladoc; an id-sorted replay
-        // would reorder, e.g., a minted node's sup edges from decide-rank
-        // order to dst-ascending)
-        val t =
-          if (baseRound == 0) seedTaxo()
-          else {
-            val nodesDF = spark.read.parquet(s"${roundDir(ckptDir, baseRound)}/nodes")
-            val edgesDF = spark.read.parquet(s"${roundDir(ckptDir, baseRound)}/edges")
-            val tt = new MutableTaxo
-            if (nodesDF.columns.contains("seq")) {
-              nodesDF.select(col("seq"), col("id"), col("label"))
-                .as[(Long, Long, String)].collect().sortBy(_._1)
-                .foreach { case (_, id, l) => tt.addNode(id, Some(l)) }
-              edgesDF.select(col("seq"), col("src"), col("dst"), col("label"))
-                .as[(Long, Long, Long, String)].collect().sortBy(_._1)
-                .foreach { case (_, u, v, l) => tt.addEdge(u, v, l) }
-            } else {
-              // pre-delta checkpoint format (no seq column; full nodes/edges
-              // written every round as one coalesce(1) file): replay exactly
-              // as that binary did — nodes id-sorted, edges in file order
-              // (the single-file write preserved insertion order)
-              nodesDF.select(col("id"), col("label"))
-                .as[(Long, String)].collect().sortBy(_._1)
-                .foreach { case (id, l) => tt.addNode(id, Some(l)) }
-              edgesDF.select(col("src"), col("dst"), col("label"))
-                .as[(Long, Long, String)].collect()
-                .foreach { case (u, v, l) => tt.addEdge(u, v, l) }
-            }
-            tt
-          }
-        for (i <- (baseRound + 1) to resumeRound) {
-          val rd = roundDir(ckptDir, i)
-          spark.read.parquet(s"$rd/nodes_delta")
-            .select(col("seq"), col("id"), col("label"))
-            .as[(Long, Long, String)].collect().sortBy(_._1)
-            .foreach { case (_, id, l) => t.addNode(id, Some(l)) }
-          spark.read.parquet(s"$rd/edges_delta")
-            .select(col("seq"), col("src"), col("dst"), col("label"))
-            .as[(Long, Long, Long, String)].collect().sortBy(_._1)
-            .foreach { case (_, u, v, l) => t.addEdge(u, v, l) }
-        }
-        t
-      }
+    // resume from the last complete round, or start at the seed
+    val state = Checkpoint.load(spark, ckptDir)
+    val taxo = state.taxo
     // incremental decide-index state; a resumed run restores the persisted
     // RHP center so its banded probes are bit-identical to the uninterrupted
     // run's (SnapshotEmbeddings scaladoc)
     val embCache = new graft.retrieve.SnapshotEmbeddings(models.emb.dim)
-    if (resumeRound > 0) {
-      val cf = Paths.get(s"${roundDir(ckptDir, resumeRound)}/center.txt")
-      if (Files.exists(cf)) {
-        val lines = Files.readAllLines(cf).asScala
-        embCache.restoreCenter(lines.drop(1).map(_.toDouble).toArray, lines.head.toInt)
-      }
-    }
+    for ((n, c) <- state.center) embCache.restoreCenter(c, n)
     // the scored-pairs memo is parquet-backed and stays distributed: it
     // grows without bound across rounds, so it is never collected whole —
-    // each round attaches only the candidate-relevant slice. Like the
-    // taxonomy it checkpoints as per-round DELTAS (fresh pairs only; the
-    // full-history rewrite per round was an O(history) write) with a full
-    // snapshot on compaction rounds; the live store is the base ∪ deltas
-    // union (≤ compactEvery branches deep before the next compaction cuts
-    // the chain).
-    var scoredStore: DataFrame = {
-      val empty = spark.emptyDataset[(String, String, Double)]
-        .toDF("subLabel", "supLabel", "p")
-      val base =
-        if (baseRound == 0) empty
-        else spark.read.parquet(s"${roundDir(ckptDir, baseRound)}/scored_pairs")
-      ((baseRound + 1) to resumeRound).foldLeft(base) { (acc, i) =>
-        val rd = roundDir(ckptDir, i)
-        if (Files.exists(Paths.get(s"$rd/scored_pairs_delta")))
-          acc.union(spark.read.schema(ScoredPairSchema).parquet(s"$rd/scored_pairs_delta"))
-        else if (Files.exists(Paths.get(s"$rd/scored_pairs")))
-          spark.read.parquet(s"$rd/scored_pairs") // pre-delta format: per-round FULL store
-        else acc // round minted no pairs delta (legal on empty rounds)
-      }
-    }
-    // the id allocator is persisted per round (meta.txt): deriving it as
-    // max(id)+1 on resume could REUSE an id whose (max-valued) node was
-    // canonicalize-merged away, resurrecting stale provenance records —
-    // the uninterrupted run's counter is monotonic across merges
-    var nextKey = {
-      val mf = Paths.get(s"${roundDir(ckptDir, resumeRound)}/meta.txt")
-      if (resumeRound > 0 && Files.exists(mf))
-        new String(Files.readAllBytes(mf), "UTF-8").trim.toLong
-      else taxo.nodes.max + 1
-    }
-    val allLineage = mutable.ArrayBuffer.empty[LineageRow]
-    val allDeltas = mutable.ArrayBuffer.empty[(Long, Long, String, Int)]
-    val sameAs = mutable.ArrayBuffer.empty[(String, String, Int)]
-    if (resumeRound > 0) {
-      // restore per-round provenance (edge deltas + sameAs) so a resumed
-      // run emits identical src_round lineage to an uninterrupted one
-      val rd = roundDir(ckptDir, resumeRound)
-      allDeltas ++= spark.read.parquet(s"$rd/deltas")
-        .as[(Long, Long, String, Int)].collect().sortBy(d => (d._4, d._1, d._2))
-      sameAs ++= spark.read.parquet(s"$rd/sameas")
-        .as[(String, String, Int)].collect().sortBy(s => (s._3, s._1, s._2))
-    }
-
+    // each round attaches only the candidate-relevant slice
+    var scoredStore = state.scored
     // distributed (vec_id, embedding) store for the at-scale decide path:
-    // latest full snapshot + subsequent deltas, mirroring the taxonomy
-    // checkpoint scheme. Stays null until a round crosses
-    // distributedRetrieveNodes; a resume whose checkpoint predates the
-    // store (or a run that crosses the threshold mid-flight) rebuilds it
-    // with ONE distributed re-embed pass over the snapshot.
-    var embStore: DataFrame = {
-      val baseEmb = (resumeRound to 1 by -1)
-        .find(i => Files.exists(Paths.get(s"${roundDir(ckptDir, i)}/embeddings")))
-      baseEmb match {
-        case None => null
-        case Some(b) =>
-          var df = spark.read.parquet(s"${roundDir(ckptDir, b)}/embeddings")
-          for (i <- (b + 1) to resumeRound;
-               p = s"${roundDir(ckptDir, i)}/emb_delta"
-               if Files.exists(Paths.get(p)))
-            df = df.union(spark.read.parquet(p))
-          df
-      }
-    }
+    // null until a round crosses distributedRetrieveNodes; a resume whose
+    // checkpoint predates the store (or a run that crosses the threshold
+    // mid-flight) builds it with ONE distributed re-embed pass
+    var embStore = state.embeddings
+    var nextKey = state.nextKey
+    val allLineage = mutable.ArrayBuffer.empty[LineageRow]
+    // per-round provenance (edge deltas + sameAs), restored on resume so
+    // a resumed run emits identical src_round lineage
+    val allDeltas = mutable.ArrayBuffer.from(state.deltas)
+    val sameAs = mutable.ArrayBuffer.from(state.sameAs)
 
     // cached only when a later round of this run reads the counts again
     val mentions = {
@@ -1019,8 +889,8 @@ object KgPipeline {
         else extractMentions(corpus, textCol, cfg.minMentionFreq)
       if (cfg.rounds - resumeRound > 1) m.persist() else m
     }
-    // a chunk's slice collect is skipped while the scored store has no
-    // rows: a fresh run's rounds until one scores a pair
+    // the prior slice is skipped while the scored store has no rows: a
+    // fresh run's rounds until one scores a pair
     var storeEmpty = resumeRound == 0
 
     val phase = mutable.LinkedHashMap.empty[String, Double]
@@ -1099,10 +969,7 @@ object KgPipeline {
         .orderBy(col("freq").desc, col("mention").asc)
         .limit(cfg.maxCandidatesPerRound)
         .select("mention")
-      val rd = roundDir(ckptDir, r)
-      // this round has no COMMIT marker: whatever its directory holds was
-      // left by a killed run
-      LocalParquet.deleteTree(Paths.get(rd))
+      Checkpoint.startRound(ckptDir, r)
       // the round's candidate list, computed once. A round that fits one
       // chunk collects it with one top-k action; a larger round
       // checkpoints it, so extraction never runs twice, and streams it
@@ -1114,38 +981,53 @@ object KgPipeline {
       val t0 = System.currentTimeMillis()
       val (ctx, seedSource) = timed("decide")(
         decideSetup(spark, taxo, models, cfg, r, embCache, embStore))
-      // (mention, seeds) rows in mention (= label) order. In
-      // distributed-retrieval mode the seeds come from ONE banded pass over
-      // the round's candidate list and ride in the rows; otherwise each
-      // task searches the broadcast index
-      val rows: Iterator[(String, Seq[Long])] = timed("decide") {
-        seedSource match {
-          case Right(_) =>
-            (if (oneChunk) collected.iterator
-             else checkpointed.orderBy("mention").as[String].toLocalIterator().asScala)
-              .map(m => (m, Nil))
-          case Left(center) =>
-            val cands = if (oneChunk) collected.toSeq.toDF("mention") else checkpointed
-            val seeded = cands.join(
-              retrieveSeeds(spark, ctx, cands, embStore, center, models.emb.dim),
-              Seq("mention"), "left_outer").as[(String, Seq[Long])]
-            (if (oneChunk) seeded.collect().sortBy(_._1).iterator
-             else seeded.orderBy("mention").toLocalIterator().asScala)
-              .map { case (m, seeds) => (m, if (seeds == null) Nil else seeds) }
+      def seeds(cands: DataFrame): Option[DataFrame] = seedSource.left.toOption.map(center =>
+        retrieveSeeds(spark, ctx, cands, embStore, center, models.emb.dim))
+      // (mention, prior slice, seeds) rows in mention (= label) order. The
+      // distributed-retrieval seeds come from ONE banded pass over the
+      // round's candidate list (otherwise each task searches the broadcast
+      // index); the prior slice is ONE store pass, skipped while the store
+      // is empty. A larger round joins both onto its streamed list.
+      val rows: Iterator[(String, Seq[ScoredPair], Seq[Long])] =
+        if (oneChunk) {
+          val seeded = timed("decide") {
+            if (seedSource.isRight) collected.map(m => (m, Seq.empty[Long]))
+            else {
+              val cands = collected.toSeq.toDF("mention")
+              cands.join(seeds(cands).get, Seq("mention"), "left_outer")
+                .as[(String, Seq[Long])].collect().sortBy(_._1)
+                .map { case (m, ss) => (m, if (ss == null) Nil else ss) }
+            }
+          }
+          val priors = timed("prior_slice") {
+            if (storeEmpty) Map.empty[String, Seq[ScoredPair]]
+            else priorsByCandidate(collected.toSeq, scoredStore)
+          }
+          seeded.iterator.map { case (m, ss) => (m, priors.getOrElse(m, Nil), ss) }
+        } else {
+          val priors = timed("prior_slice") {
+            if (storeEmpty) None
+            else Some(priorsByMention(checkpointed, scoredStore).localCheckpoint(eager = true))
+          }
+          (seeds(checkpointed) ++ priors)
+            .foldLeft(checkpointed)(_.join(_, Seq("mention"), "left_outer"))
+            .orderBy("mention").toLocalIterator().asScala.map { row =>
+              def opt[A](c: String): Seq[A] =
+                if (!row.schema.fieldNames.contains(c) || row.isNullAt(row.fieldIndex(c))) Nil
+                else row.getSeq[A](row.fieldIndex(c))
+              (row.getString(0), opt[Row]("priors").map(p =>
+                ScoredPair(p.getString(0), p.getString(1), p.getDouble(2))), opt[Long]("seeds"))
+            }
         }
-      }
       val seedMs = System.currentTimeMillis() - t0
 
-      // 3. decide, chunk by chunk. Every chunk decides against the same
-      // frozen snapshot, so the commit starts only after the last one (in
-      // local mode a task's broadcast value IS the driver's taxonomy). A
-      // chunk's decisions come back label-sorted and the chunks are in
-      // label order, so their concatenation is the round's commit order.
-      // Fresh pairs (scored this round, not imported from the prior slice:
-      // ScoreCache.exportFresh) ARE the round's scored-pairs delta, so they
-      // go to disk chunk by chunk, one part file each — the store write
-      // needs no anti-join against history, and the driver holds one
-      // chunk's pairs. Decisions stay on the driver (see PipelineConfig).
+      // 3. decide, chunk by chunk, every chunk against the same frozen
+      // snapshot (in local mode a task's broadcast value IS the driver's
+      // taxonomy), so the commit starts after the last one. Chunks are in
+      // label order and each comes back label-sorted: their concatenation
+      // is the commit order. Fresh pairs (ScoreCache.exportFresh) ARE the
+      // round's scored-pairs delta and go to disk chunk by chunk, so the
+      // driver holds one chunk's pairs; decisions stay (see PipelineConfig).
       val decisions = mutable.ArrayBuffer.empty[DecisionRow]
       val decideLineage = mutable.ArrayBuffer.empty[LineageRow]
       var nSeeded = 0L
@@ -1154,20 +1036,14 @@ object KgPipeline {
       // an empty round still runs one (empty) decide job
       while (k == 0 || timed("candidates")(chunks.hasNext)) {
         val batch = timed("candidates")(if (chunks.hasNext) chunks.next() else Nil)
-        nSeeded += batch.count(_._2.nonEmpty)
-        val priors = timed("prior_slice") {
-          if (storeEmpty) Map.empty[String, Seq[ScoredPair]]
-          else priorsByCandidate(batch.map(_._1), scoredStore)
-        }
-        val out = timed("decide")(decideChunk(spark, ctx,
-          batch.map { case (m, seeds) => (m, priors.getOrElse(m, Nil), seeds) }))
+        nSeeded += batch.count(_._3.nonEmpty)
+        val out = timed("decide")(decideChunk(spark, ctx, batch))
         for (last <- decisions.lastOption; first <- out.decisions.headOption)
           require(last.label < first.label,
             s"decide chunk $k starts at '${first.label}', not after '${last.label}'")
         decisions ++= out.decisions
         decideLineage ++= out.lineage
-        timed("checkpoint")(LocalParquet.write(s"$rd/scored_pairs_delta", ScoredPairRows,
-          out.scored.iterator, part = k))
+        timed("checkpoint")(Checkpoint.writeScored(ckptDir, r, k, out.scored.iterator))
         k += 1
       }
       decideLineage += (seedSource match {
@@ -1210,16 +1086,9 @@ object KgPipeline {
       for ((dup, canon) <- merge; dl <- mergedLabels.get(dup); cl <- mergedLabels.get(canon))
         sameAs += ((dl, cl, r))
 
-      // 6. checkpoint (atomic via COMMIT marker written last). Taxonomy
-      // state checkpoints as the round's ADDITIVE delta (surviving minted
-      // nodes + surviving added edges — merges only remove same-round
-      // mints), with a full snapshot every cfg.compactEvery rounds; the
-      // per-round write cost tracks the delta, not the snapshot. The scored
-      // store follows the same scheme: per-round fresh-pair deltas with a
-      // full-store rewrite on compaction rounds, which also resets the
-      // live union chain so plans don't grow unboundedly.
+      // 6. checkpoint: the round's tables, COMMIT marker last; the stores
+      // are re-read through the same chain a resume reads
       timed("checkpoint") {
-        val nodeAdds = newConcepts.filterNot { case (_, id) => merge.contains(id) }
         // edge delta = edges inserted this round (commit + merge re-points,
         // first-occurrence order = live insertion order) PLUS label flips
         // (addEdge over an existing edge rewrites its label in place —
@@ -1230,113 +1099,18 @@ object KgPipeline {
           .toSeq.distinct
           .filter { case (u, v) => taxo.containsEdge(u, v) }
           .map { case (u, v) => (u, v, taxo.succ(u)(v)) }
-        // Spark writes (compaction snapshots, the embedding store) are
-        // INDEPENDENT jobs gated by the one COMMIT marker written last, so they are submitted from a driver thread
-        // pool and awaited before the marker (optimization guide §2.6:
-        // actions are only sequential because the driver calls them
-        // sequentially); a failure in ANY write propagates out of the
-        // awaits and the marker is never written. Daemon workers: an
-        // exception escaping before the shutdown below must not leave
-        // non-daemon pool threads pinning the JVM open.
-        val ckptPool = java.util.concurrent.Executors.newFixedThreadPool(8,
-          (r: Runnable) => { val t = new Thread(r, "ckpt-write"); t.setDaemon(true); t })
-        implicit val ckptEc: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(ckptPool)
-        def bg(f: => Unit): scala.concurrent.Future[Unit] = scala.concurrent.Future(f)
-        val pendingWrites = mutable.ArrayBuffer.empty[scala.concurrent.Future[Unit]]
-        def awaitWrites(): Unit =
-          try pendingWrites.foreach(f =>
-            scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-          finally { pendingWrites.clear() }
-        val compact = r % cfg.compactEvery == 0
-        if (compact) {
-          // compaction: partitioned full-snapshot write (the old per-round
-          // coalesce(1) rewrite was a single-task serial term at 2M nodes),
-          // seq-stamped in insertion order like the deltas
-          val nParts = math.max(1, taxo.numberOfNodes / 500000)
-          pendingWrites += bg(
-            taxo.nodes.zipWithIndex.map { case (n, k) => (k.toLong, n, taxo.getLabel(n)) }
-              .toDF("seq", "id", "label")
-              .repartition(nParts).write.mode(SaveMode.Overwrite).parquet(s"$rd/nodes"))
-          pendingWrites += bg(
-            taxo.edges.zipWithIndex.map { case ((u, v, l), k) => (k.toLong, u, v, l) }
-              .toDF("seq", "src", "dst", "label")
-              .repartition(nParts).write.mode(SaveMode.Overwrite).parquet(s"$rd/edges"))
-        }
-        // scored-pairs store: the round's fresh pairs are on disk already
-        // (scored_pairs_delta, written chunk by chunk), so the per-round
-        // store write is O(delta) with no shuffle of the history at all.
-        // (The r4 form anti-joined them against the full store here — an
-        // O(history) shuffle every round, 64.9 s of the §9g drive's
-        // checkpoint wall.) A compaction round also writes the full store.
-        if (compact)
-          pendingWrites += bg(scoredStore
-            .union(spark.read.schema(ScoredPairSchema).parquet(s"$rd/scored_pairs_delta"))
-            .write.mode(SaveMode.Overwrite).parquet(s"$rd/scored_pairs"))
-        // embedding store (at-scale decide path): this round's merge
-        // SURVIVORS are the per-round delta; a full store snapshot is
-        // written on the crossover round (first build) and on compaction
-        // rounds — the identical delta/compaction scheme the taxonomy and
-        // scored store use, so resume reconstructs all three the same way
-        if (embStore != null) {
-          val survivors = canonRes.survivorVecs().select(col("vec_id"), col("embedding"))
-          if (embFullWrite || compact) {
-            pendingWrites += bg(embStore.union(survivors)
-              .write.mode(SaveMode.Overwrite).parquet(s"$rd/embeddings"))
-          } else {
-            pendingWrites += bg((if (nodeAdds.size <= DriverRows) survivors.coalesce(1)
-              else survivors).write.mode(SaveMode.Overwrite).parquet(s"$rd/emb_delta"))
-          }
-        }
-        // every taxonomy row carries its insertion index (`seq`): the
-        // resume replay sorts on it, reconstructing the live run's exact
-        // LinkedHashMap insertion order (MutableTaxo documents insertion
-        // order as decision-relevant) even across repartitioned writes.
-        // These tables are built on the driver, so the driver writes them
-        // at any size, with no Spark job: a Spark write of a local Seq
-        // copies it into a LocalRelation and pays job launch + output
-        // committer per table. 2M-row edge table, local[4]: Spark's write
-        // 6.8-14.3 s, this one 0.6-1.6 s; the resume replay's read of the
-        // single file is 1.1-1.4 s against 0.6-2.2 s for Spark's 4 files.
-        try {
-          LocalParquet.writeRows(s"$rd/nodes_delta",
-            nodeAdds.zipWithIndex.map { case ((l, id), k) => (k.toLong, id, l) },
-            "seq", "id", "label")
-          LocalParquet.writeRows(s"$rd/edges_delta",
-            edgeAdds.zipWithIndex.map { case ((u, v, l), k) => (k.toLong, u, v, l) },
-            "seq", "src", "dst", "label")
-          LocalParquet.writeRows(s"$rd/lineage", decideLineage.toSeq ++ canonRes.lineage)
-          // cumulative provenance (bounded by inserted edges — at the §9b
-          // drive it reaches 2M rows): lets a resumed run reconstruct
-          // src_round exactly
-          LocalParquet.writeRows(s"$rd/deltas", allDeltas.toSeq, "src", "dst", "label", "round")
-          LocalParquet.writeRows(s"$rd/sameas", sameAs.toSeq, "a", "b", "round")
-          // barrier: every table durable before any state swap or the marker
-          awaitWrites()
-        } finally ckptPool.shutdown()
-        // post-write state swaps + cache releases (read-back depends on the
-        // completed writes)
-        scoredStore =
-          if (compact) spark.read.parquet(s"$rd/scored_pairs")
-          else scoredStore.union(
-            spark.read.schema(ScoredPairSchema).parquet(s"$rd/scored_pairs_delta"))
-        if (embStore != null) {
-          val prev = embStore
-          canonRes.release()
-          if (embFullWrite || compact) {
-            prev.unpersist()
-            embStore = spark.read.parquet(s"$rd/embeddings")
-          } else embStore = embStore.union(spark.read.parquet(s"$rd/emb_delta"))
-        } else canonRes.release()
-        // the decide index's RHP center (dim doubles) — resumed banded
-        // probes must hash into the same buckets as the original run's
-        for (c <- embCache.currentCenter)
-          Files.write(Paths.get(s"$rd/center.txt"),
-            (embCache.centerSnapshotSize.toString +: c.map(_.toString).toSeq)
-              .mkString("\n").getBytes("UTF-8"))
-        // id-allocator state (monotonic across merges — see resume note)
-        Files.write(Paths.get(s"$rd/meta.txt"), nextKey.toString.getBytes("UTF-8"))
-        Files.write(commitMarker(ckptDir, r), Array.emptyByteArray)
+        val tables = Checkpoint.RoundTables(
+          newConcepts.collect { case (l, id) if !merge.contains(id) => (id, l) }, edgeAdds,
+          decideLineage.toSeq ++ canonRes.lineage, allDeltas.toSeq, sameAs.toSeq, nextKey,
+          embCache.currentCenter.map((embCache.centerSnapshotSize, _)))
+        val prevEmb = embStore
+        val (scored, emb) = Checkpoint.commit(spark, ckptDir, r, r % cfg.compactEvery == 0,
+          taxo, tables, Option(prevEmb).map(s =>
+            (s, canonRes.survivorVecs().select(col("vec_id"), col("embedding")), embFullWrite)))
+        canonRes.release()
+        if (prevEmb != null) prevEmb.unpersist()
+        scoredStore = scored
+        embStore = emb
       }
       // crash injection for the kill+resume drive: hard-halt (no cleanup,
       // like SIGKILL) right after round N's checkpoint commits
@@ -1363,9 +1137,7 @@ object KgPipeline {
     // of recomputing (and a crash before the move recomputes them
     // deterministically from the resumed taxonomy)
     for (mcfg <- cfg.move) timed("move") {
-      val mdir = s"$ckptDir/move"
-      val marker = Paths.get(s"$mdir/COMMIT")
-      // the marker records WHICH taxonomy the decisions were computed
+      // the move's COMMIT marker records WHICH taxonomy the decisions were computed
       // against (the insert-round count) AND under which MoveConfig:
       // extending a completed checkpoint with more rounds must recompute
       // the move on the new taxonomy, and re-running it with a changed
@@ -1374,8 +1146,6 @@ object KgPipeline {
       // old one. MoveConfig is a flat case class, so its toString is a
       // deterministic single-line fingerprint of every field.
       val markerStamp = s"${cfg.rounds}\n$mcfg"
-      val markerValid = Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8").trim == markerStamp
       // per-partition engines embed the whole snapshot when the config
       // needs a vector index (rag retrieval / the siblings feature,
       // which is in MoveConfig's DEFAULT features) — defaultParallelism
@@ -1389,53 +1159,43 @@ object KgPipeline {
           s"PER PARTITION (embedding all ${taxo.numberOfNodes} labels per task). " +
           "Above 100k nodes use method='search' with selectionFeatures=Seq(\"parent\") " +
           "(index-free), or cap the taxonomy.")
-      val decisions: Seq[(Long, Seq[Long], Seq[Long])] =
-        if (markerValid)
-          spark.read.parquet(s"$mdir/decisions")
-            .select(col("seq"), col("target"), col("winners"), col("oldParents"))
-            .as[(Long, Long, Seq[Long], Seq[Long])].collect().sortBy(_._1)
-            .map(d => (d._2, d._3, d._4)).toSeq
-        else {
-          // move candidates come from the mention stream: bottom concepts
-          // the pipeline minted (seed leaves are excluded — they are the
-          // curated skeleton), C9 auto-mode order + cap semantics
-          val seedIds = seed.nodes.toSet
-          val targets0: Seq[Long] = mcfg.mode match {
-            case "auto" =>
-              taxo.bottomNodes.filterNot(seedIds.contains).filterNot(mcfg.ignore.contains)
-            case _ => mcfg.inputConcepts
-          }
-          val targets = mcfg.maxOuterLoop.map(targets0.take).getOrElse(targets0)
-          val bTaxoF = spark.sparkContext.broadcast(taxo)
-          val bModelsF = spark.sparkContext.broadcast(models)
-          // the search space is target-independent under frozen semantics:
-          // build it ONCE here and broadcast (in local mode the tasks then
-          // share a single instance; per-partition engines each rebuilding
-          // it would multiply an O(snapshot) subgraph plus a levels pass
-          // by the task count)
-          val bSpaceF =
-            if (mcfg.method == "search")
-              Some(spark.sparkContext.broadcast(taxo.createMoveSearchSpace(
-                mcfg.scopeTopLevel, mcfg.scopeBottomLevel)))
-            else None
-          val ds = targets.toDF("target")
-            .repartition(spark.sparkContext.defaultParallelism, col("target"))
-            .as[Long]
-            .mapPartitions { it =>
-              val engine = new graft.core.CategoryMoveEngine(bModelsF.value, mcfg)
-              bSpaceF match {
-                case Some(bs) => engine.prepareFrozen(bTaxoF.value, bs.value)
-                case None => engine.prepareFrozen(bTaxoF.value)
-              }
-              it.map { t => val (w, o) = engine.examineFrozen(t); (t, w, o) }
-            }.collect().sortBy(_._1).toSeq
-          Files.createDirectories(Paths.get(mdir))
-          ds.zipWithIndex.map { case ((t, w, o), k) => (k.toLong, t, w, o) }
-            .toDF("seq", "target", "winners", "oldParents")
-            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$mdir/decisions")
-          Files.write(marker, markerStamp.getBytes("UTF-8"))
-          ds
+      val decisions = Checkpoint.moveDecisions(spark, ckptDir, markerStamp).getOrElse {
+        // move candidates come from the mention stream: bottom concepts
+        // the pipeline minted (seed leaves are excluded — they are the
+        // curated skeleton), C9 auto-mode order + cap semantics
+        val seedIds = seed.nodes.toSet
+        val targets0: Seq[Long] = mcfg.mode match {
+          case "auto" =>
+            taxo.bottomNodes.filterNot(seedIds.contains).filterNot(mcfg.ignore.contains)
+          case _ => mcfg.inputConcepts
         }
+        val targets = mcfg.maxOuterLoop.map(targets0.take).getOrElse(targets0)
+        val bTaxoF = spark.sparkContext.broadcast(taxo)
+        val bModelsF = spark.sparkContext.broadcast(models)
+        // the search space is target-independent under frozen semantics:
+        // build it ONCE here and broadcast (in local mode the tasks then
+        // share a single instance; per-partition engines each rebuilding
+        // it would multiply an O(snapshot) subgraph plus a levels pass
+        // by the task count)
+        val bSpaceF =
+          if (mcfg.method == "search")
+            Some(spark.sparkContext.broadcast(taxo.createMoveSearchSpace(
+              mcfg.scopeTopLevel, mcfg.scopeBottomLevel)))
+          else None
+        val ds = targets.toDF("target")
+          .repartition(spark.sparkContext.defaultParallelism, col("target"))
+          .as[Long]
+          .mapPartitions { it =>
+            val engine = new graft.core.CategoryMoveEngine(bModelsF.value, mcfg)
+            bSpaceF match {
+              case Some(bs) => engine.prepareFrozen(bTaxoF.value, bs.value)
+              case None => engine.prepareFrozen(bTaxoF.value)
+            }
+            it.map { t => val (w, o) = engine.examineFrozen(t); (t, w, o) }
+          }.collect().sortBy(_._1).toSeq
+        Checkpoint.commitMove(spark, ckptDir, markerStamp, ds)
+        ds
+      }
       // deterministic target-order commit: detach old parents, attach
       // winners as `moved` (cycle-screened; a winner lost to a cycle or a
       // fully-failed target falls back to its old parents, C7 semantics)

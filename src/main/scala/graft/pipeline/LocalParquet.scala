@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -12,14 +12,19 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
 /** Driver-side parquet writer for driver-resident tables of flat rows
   * (Long, Int, Double and String columns): one snappy file per table
-  * directory, or one per part for a table written in parts; no Spark job. A round-sized checkpoint table is a few hundred
-  * rows, where a Spark write is almost all job-launch and output-committer
-  * latency; at millions of rows a Spark write of a local Seq still pays for
-  * the copy into a LocalRelation, which this writer streams past.
+  * directory, or one per part for a table written in parts; no Spark job.
+  * It writes every checkpoint table built on the driver ([[Checkpoint]]):
+  * the per-round deltas, lineage and provenance, the fresh scored pairs,
+  * and the full `nodes`/`edges` snapshots of compaction rounds. A
+  * round-sized table is a few hundred rows, where a Spark write is almost
+  * all job-launch and output-committer latency; at millions of rows a
+  * Spark write of a local Seq still pays for the copy into a
+  * LocalRelation, which this writer streams past.
   * The files carry the schema Spark's own writer gives the same rows
   * (nullable columns optional, the rest required; strings as UTF-8
   * binary), so `spark.read.parquet` sees the same column names and types.
@@ -59,6 +64,18 @@ object LocalParquet {
       .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
       .build()
     try rows.foreach(w.write) finally w.close()
+  }
+
+  /** Column names of table `dir`, from the footer of its first part file
+    * (none for a table without part files). */
+  def columns(dir: String): Seq[String] = {
+    val ls = Files.list(Paths.get(dir))
+    val first = try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq.sorted
+      .headOption finally ls.close()
+    first.toSeq.flatMap { f =>
+      val r = ParquetFileReader.open(new LocalInputFile(f))
+      try r.getFileMetaData.getSchema.getFields.asScala.map(_.getName) finally r.close()
+    }
   }
 
   private[pipeline] def deleteTree(p: Path): Unit =

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   *   is vocabulary-bounded, so its candidate count plateaus).
   *
   * Resumable: re-running with the same ckptDir continues after the last
-  * round whose COMMIT marker exists (kill it mid-run and re-run to verify).
+  * round whose COMMIT marker exists (kill it mid-run and re-run to verify);
+  * a ckptDir in another checkpoint layout fails before any round work.
   * Prints driver-heap telemetry per run so candidate-scale drives can
   * evidence flat driver memory.
   */

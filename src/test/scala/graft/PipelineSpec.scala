@@ -42,6 +42,34 @@ class PipelineSpec extends SparkSpecBase {
     df.select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
   }
 
+  /** The `StageProperty` phase of every Spark job `f` starts. */
+  private def jobPhases(f: => Unit): Seq[String] = {
+    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        phases.add(String.valueOf(e.properties.getProperty(KgPipeline.StageProperty)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      // listener events arrive asynchronously and in order: once a marker
+      // job's start is seen, every earlier job's has been too
+      spark.sparkContext.setLocalProperty(KgPipeline.StageProperty, "marker")
+      try spark.range(1).count()
+      finally spark.sparkContext.setLocalProperty(KgPipeline.StageProperty, null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!phases.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(phases.contains("marker"), "listener saw no marker job")
+      phases.toArray(Array.empty[String]).toSeq.filter(_ != "marker")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def fullRows(df: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    df.select("subj", "pred", "obj", "src_round", "lineage")
+      .as[(String, String, String, Int, String)].collect().sortBy(_.toString).toSeq
+  }
+
   test("driver-contract entry() yields triples") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -235,27 +263,6 @@ class PipelineSpec extends SparkSpecBase {
     assert(rows(r2.triples) == rows(rFull.triples))
   }
 
-  test("resume falls back to a pre-delta-format scored_pairs store") {
-    import spark.implicits._
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val full = Files.createTempDirectory("kgofmt_full").toString
-    val part = Files.createTempDirectory("kgofmt_part").toString
-    val rFull = KgPipeline.run(spark, corpus(300, 4), "text",
-      KgPipeline.domainModels(), cfg(2), full)
-    KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(), cfg(1), part)
-    // simulate a checkpoint written by the pre-delta binary: round 1's
-    // delta IS the full store (empty base), so renaming the directory
-    // reproduces the old per-round-full-store layout exactly
-    JFiles.move(JPaths.get(s"$part/round=1/scored_pairs_delta"),
-      JPaths.get(s"$part/round=1/scored_pairs"))
-    val rResumed = KgPipeline.run(spark, corpus(300, 4), "text",
-      KgPipeline.domainModels(), cfg(2), part)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("subj", "pred", "obj", "src_round", "lineage")
-        .as[(String, String, String, Int, String)].collect().sortBy(_.toString).toSeq
-    assert(rows(rResumed.triples) == rows(rFull.triples))
-  }
-
   test("distributed banded retrieval matches the broadcast BandedIndex seed-for-seed") {
     import spark.implicits._
     import graft.retrieve.{BandedIndex, DistributedBandedRetrieve}
@@ -334,60 +341,6 @@ class PipelineSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("maxSnapshotNodes"))
     assert(e.getMessage.contains("-Xmx"))
-  }
-
-  test("resume from a GENUINE pre-delta-format checkpoint (full nodes/edges, no seq column)") {
-    import spark.implicits._
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
-    import org.apache.spark.sql.SaveMode
-    val full = Files.createTempDirectory("kgpre_full").toString
-    val part = Files.createTempDirectory("kgpre_part").toString
-    val rFull = KgPipeline.run(spark, corpus(300, 4), "text",
-      KgPipeline.domainModels(), cfg(2), full)
-    KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(), cfg(1), part)
-    // rewrite round 1 exactly as the pre-delta binary's checkpoint did:
-    // full `nodes`(id,label) / `edges`(src,dst,label) — NO seq column —
-    // plus a per-round-full scored_pairs store; no meta.txt / center.txt /
-    // *_delta dirs. Reconstruct the round-1 taxonomy from the new-format
-    // deltas, then dump it through the old write shape (taxo.nodes /
-    // taxo.edges order, coalesce(1)).
-    val t = KgPipeline.seedTaxo()
-    spark.read.parquet(s"$part/round=1/nodes_delta")
-      .select("seq", "id", "label").as[(Long, Long, String)].collect().sortBy(_._1)
-      .foreach { case (_, id, l) => t.addNode(id, Some(l)) }
-    spark.read.parquet(s"$part/round=1/edges_delta")
-      .select("seq", "src", "dst", "label").as[(Long, Long, Long, String)].collect().sortBy(_._1)
-      .foreach { case (_, u, v, l) => t.addEdge(u, v, l) }
-    val rd = s"$part/round=1"
-    t.nodes.map(n => (n, t.getLabel(n))).toDF("id", "label")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$rd/nodes")
-    t.edges.toDF("src", "dst", "label")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$rd/edges")
-    spark.read.parquet(s"$rd/scored_pairs_delta")
-      .write.mode(SaveMode.Overwrite).parquet(s"$rd/scored_pairs_old")
-    def rmTree(p: String): Unit = {
-      val path = JPaths.get(p)
-      if (JFiles.exists(path))
-        JFiles.walk(path).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => JFiles.delete(f))
-    }
-    rmTree(s"$rd/scored_pairs_delta")
-    rmTree(s"$rd/nodes_delta")
-    rmTree(s"$rd/edges_delta")
-    JFiles.deleteIfExists(JPaths.get(s"$rd/meta.txt"))
-    JFiles.deleteIfExists(JPaths.get(s"$rd/center.txt"))
-    JFiles.move(JPaths.get(s"$rd/scored_pairs_old"), JPaths.get(s"$rd/scored_pairs"))
-    // the resume must take the no-seq fallback (id-sorted nodes, file-order
-    // edges — the pre-delta binary's own reconstruction) instead of
-    // crashing on the missing column, and complete round 2
-    val rResumed = KgPipeline.run(spark, corpus(300, 4), "text",
-      KgPipeline.domainModels(), cfg(2), part)
-    assert(rResumed.roundsRun == 1) // only round 2 re-ran
-    assert(tripleSet(rResumed.triples) == tripleSet(rFull.triples))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("subj", "pred", "obj", "src_round", "lineage")
-        .as[(String, String, String, Int, String)].collect().sortBy(_.toString).toSeq
-    assert(rows(rResumed.triples) == rows(rFull.triples))
   }
 
   test("driver union-find equals distributed connectedComponents on the same pairs") {
@@ -518,7 +471,7 @@ class PipelineSpec extends SparkSpecBase {
     // edge label in place — the flip must surface for the edge delta or a
     // resumed run replays 'original' and label-filtered traversal diverges
     val d = KgPipeline.DecisionRow("join", Some(11L), Some(1.0), Seq((1L, 0.9)), Nil)
-    val res = KgPipeline.commit(t, Seq(d), 1000L, 1)
+    val res = KgPipeline.commitStream(t, Seq(d).sortBy(_.label).iterator, 1000L, 1)
     assert(res.delta.isEmpty && res.newConcepts.isEmpty)
     assert(res.labelFlips == Seq((11L, 1L)))
     assert(t.succ(11L)(1L) == "new")
@@ -722,6 +675,94 @@ class PipelineSpec extends SparkSpecBase {
       assert(!seen.contains("prior_slice"), s"phases seen: $seen")
       assert(!seen.contains("checkpoint"), s"phases seen: $seen")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("compaction with the embedding store: resume from rounds 1 and 2 equals the uninterrupted run") {
+    // round 1 crosses into distributed retrieval and writes the full
+    // embedding store, round 2 compacts every store, round 3 is deltas
+    val c = cfg(3).copy(compactEvery = 2, annNodeThreshold = 10, distributedRetrieveNodes = 10)
+    val full = Files.createTempDirectory("kgce_full").toString
+    val want = fullRows(KgPipeline.run(spark, corpus(300, 4), "text",
+      KgPipeline.domainModels(), c, full).triples)
+    assert(want.nonEmpty)
+    for (t <- Seq("nodes", "edges", "scored_pairs", "embeddings"))
+      assert(Files.exists(java.nio.file.Paths.get(s"$full/round=2/$t")), s"round 2 has no $t")
+    assert(Files.exists(java.nio.file.Paths.get(s"$full/round=3/emb_delta")))
+    for (k <- Seq(1, 2)) {
+      val part = Files.createTempDirectory(s"kgce_p$k").toString
+      KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(),
+        c.copy(rounds = k), part)
+      val resumed = KgPipeline.run(spark, corpus(300, 4), "text",
+        KgPipeline.domainModels(), c, part)
+      assert(resumed.roundsRun == 3 - k)
+      assert(fullRows(resumed.triples) == want, s"resume from round $k")
+    }
+  }
+
+  test("resume rejects a checkpoint in another layout before any round work") {
+    import spark.implicits._
+    import java.nio.file.{Path, Paths => JPaths}
+    val good = Files.createTempDirectory("kgfmt").toString
+    KgPipeline.run(spark, corpus(300, 4), "text", KgPipeline.domainModels(), cfg(1), good)
+    def variant(edit: String => Unit): String = {
+      val dir = Files.createTempDirectory("kgfmt_v")
+      val src = JPaths.get(good)
+      val walk = Files.walk(src)
+      try walk.forEach((p: Path) =>
+        if (p != src) Files.copy(p, dir.resolve(src.relativize(p).toString)))
+      finally walk.close()
+      edit(s"$dir/round=1")
+      dir.toString
+    }
+    def rmTree(p: String): Unit = {
+      val walk = Files.walk(JPaths.get(p))
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach((f: Path) => Files.delete(f))
+      finally walk.close()
+    }
+    // a round whose id allocator was never persisted
+    val noMeta = variant(rd => Files.delete(JPaths.get(s"$rd/meta.txt")))
+    // full nodes/edges snapshots without the seq insertion order
+    val noSeq = variant { rd =>
+      val t = KgPipeline.seedTaxo()
+      t.nodes.map(n => (n, t.getLabel(n))).toDF("id", "label").write.parquet(s"$rd/nodes")
+      t.edges.toDF("src", "dst", "label").write.parquet(s"$rd/edges")
+    }
+    // a round that wrote its fresh scored pairs some other way
+    val noScored = variant(rd => rmTree(s"$rd/scored_pairs_delta"))
+    val phases = jobPhases {
+      for ((dir, missing) <- Seq(noMeta -> "meta.txt", noSeq -> "column seq",
+                                 noScored -> "scored_pairs_delta")) {
+        val e = intercept[IllegalStateException](KgPipeline.run(spark, corpus(300, 4), "text",
+          KgPipeline.domainModels(), cfg(2), dir))
+        for (part <- Seq(s"$dir/round=1", s"has no $missing", "Start a fresh checkpoint dir"))
+          assert(e.getMessage.contains(part), s"'$part' not in: ${e.getMessage}")
+      }
+    }
+    assert(!phases.contains("candidates"), s"phases seen: $phases")
+  }
+
+  test("a multi-chunk round scans the scored store once for its prior slice") {
+    import spark.implicits._
+    // the non-empty prior-slice corpus below: round 2 has several
+    // candidates, each with round-1 pairs
+    val c = cfg(2).copy(retrieveSize = 1, maxCandidatesPerRound = KgPipeline.DriverRows)
+    val corp = Seq("batch query", "tabled rowing", "hashing keying", "joiner sorter",
+      "scanner filterer").flatMap(Seq.fill(3)(_)).toDF("text")
+    val runs = Seq(1, 7).map { k =>
+      var res: KgPipeline.RunResult = null
+      val phases = jobPhases {
+        res = KgPipeline.run(spark, corp, "text", KgPipeline.domainModels(), c,
+          Files.createTempDirectory(s"kgslice1_$k").toString, htmlInput = false, k)
+      }
+      val chunks2 = res.lineage.filter($"stage" === "decide" && $"round" === 2 &&
+        $"partitionId" === 0).count()
+      (chunks2, phases.count(_ == "prior_slice"), fullRows(res.triples))
+    }
+    val Seq((chunks1, slice1, rows1), (chunks7, slice7, rows7)) = runs
+    assert(chunks1 > chunks7 && chunks7 >= 1, s"round 2 chunks: $chunks1 vs $chunks7")
+    // the slice jobs do not grow with the chunk count
+    assert(slice1 > 0 && slice1 == slice7, s"prior_slice jobs: $slice1 vs $slice7")
+    assert(rows1 == rows7)
   }
 
   test("near-dup pair kernel equals the round-every-pair form") {
