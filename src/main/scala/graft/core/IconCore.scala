@@ -88,7 +88,7 @@ class ScoreCache(scorer: SubScorer) extends Serializable {
   def export: Seq[(String, String, Double)] =
     cache.iterator.map { case ((a, b), p) => (a, b, p) }.toSeq
 
-  /** Only pairs scored by THIS cache instance — excludes pairs seeded via
+  /** Only pairs scored by THIS cache instance — excludes pairs loaded by
     * [[importAll]]. The pipeline's per-round checkpoint delta is exactly
     * this set: a pair queried by decide(l) always has the candidate l on
     * one side, and every history pair touching l was imported from the

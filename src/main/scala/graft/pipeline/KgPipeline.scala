@@ -25,12 +25,13 @@ import scala.jdk.CollectionConverters._
   *      lexical table (the reference's lexical cache P1) and keep the top
   *      `maxCandidatesPerRound` by frequency. The round then runs in
   *      chunks of at most [[DriverRows]] candidates, taken in mention
-  *      (= label) order. A round that fits one chunk collects its
-  *      candidates in one action; a larger one checkpoints the list once
-  *      and streams it. The round slices the scored-pairs history down to
-  *      the pairs touching its candidates (sub-score cache M4) in one store
-  *      pass, skipped while the scored store is empty: one collect for a
-  *      one-chunk round, a join onto the streamed list for a larger one.
+  *      (= label) order. The round slices the scored-pairs history down
+  *      to the pairs touching its candidates (sub-score cache M4) in one
+  *      store pass, skipped while the scored store is empty, and one
+  *      function builds its (mention, prior slice, seeds) rows
+  *      ([[candidateRows]]). Round size picks only how they reach the
+  *      driver: a round that fits one chunk collects them, a larger one
+  *      checkpoints its list once and streams them.
   *   3. LINK + DECIDE — one task per candidate batch embeds its batch,
   *      kNN-retrieves bases from the broadcast index (ICON manual mode
   *      with auto_bases, icon.py:515-556), and runs the enhanced traversal
@@ -73,11 +74,11 @@ object KgPipeline {
       // snapshot the chunk is 1.1M pairs, ~156 MB of pairs and ~16 MB of
       // decisions, from a 58 MB serialized result
       // (spark.driver.maxResultSize defaults to 1 GB). The chunk's prior
-      // slice is on the driver too (collected for a one-chunk round,
-      // streamed in the candidate rows for a larger one) and of the same
+      // slice is on the driver too, in its candidate rows, and of the same
       // order: its pairs are the ones its candidates scored in earlier
-      // rounds, so ≈11 pairs per candidate, ~1.1M pairs per full chunk. Fresh pairs go to disk chunk
-      // by chunk, so at any cap the driver holds one chunk's pairs.
+      // rounds, so ≈11 pairs per candidate, ~1.1M pairs per full chunk.
+      // Fresh pairs go to disk chunk by chunk, so at any cap the driver
+      // holds one chunk's pairs.
       // Decisions stay on the driver until the round commits: ~161 B each
       // by SizeEstimator (3.2 MB for 20000 rand50k-mention decisions
       // against the seed taxonomy), far below the ~1 KB node a committed
@@ -290,7 +291,9 @@ object KgPipeline {
     * this many candidates, taken in label order; [[decideChunk]] brings
     * each chunk's decisions, lineage and fresh scored pairs to the driver
     * in one action. A round with `maxCandidatesPerRound` ≤ this is one
-    * chunk, and its candidates come to the driver in one collect. */
+    * chunk: its candidates come to the driver in one collect, and its
+    * candidate rows in a second one only when it has a prior slice or
+    * distributed seeds ([[candidateRows]]). A larger round streams them. */
   val DriverRows = 100000
 
   /** One chunk's decide output: decisions label-sorted (the commit order),
@@ -299,47 +302,26 @@ object KgPipeline {
   final case class DecidedChunk(decisions: Array[DecisionRow], lineage: Seq[LineageRow],
                                 scored: Seq[ScoredPair])
 
-  /** Per-round slice of the scored-pairs history relevant to this
-    * candidate batch: pairs whose sub OR sup label is a candidate mention.
-    * The full history stays a parquet-backed DataFrame (it grows without
-    * bound across rounds at corpus scale); a round collects only its own
-    * slice ([[priorsByCandidate]]). */
-  def priorScoreSlice(candidates: DataFrame, scoredStore: DataFrame): DataFrame = {
-    val m = broadcast(candidates.select(col("mention")))
-    scoredStore.join(m, scoredStore("subLabel") === m("mention"), "left_semi")
-      .union(scoredStore.join(m, scoredStore("supLabel") === m("mention"), "left_semi"))
-      .distinct()
-  }
-
-  /** A one-chunk round's prior slice: one [[priorScoreSlice]] collect,
-    * grouped on the driver by the candidate each pair touches (a pair with
-    * candidates on both sides goes to both). A decide(l) call only ever queries pairs
-    * with l on one side, so each candidate gets exactly the pairs it
-    * needs. Bounded by the chunk's own pairs: see [[PipelineConfig]]. */
-  private def priorsByCandidate(cands: Seq[String],
-                                scoredStore: DataFrame): Map[String, Seq[ScoredPair]] = {
-    import scoredStore.sparkSession.implicits._
-    val own = cands.toSet
-    val by = mutable.HashMap.empty[String, mutable.ArrayBuffer[ScoredPair]]
-    for (r <- priorScoreSlice(cands.toDF("mention"), scoredStore)
-           .select("subLabel", "supLabel", "p").collect()) {
-      val p = ScoredPair(r.getString(0), r.getString(1), r.getDouble(2))
-      for (m <- Seq(p.subLabel, p.supLabel).distinct if own(m))
-        by.getOrElseUpdate(m, mutable.ArrayBuffer.empty) += p
-    }
-    by.view.mapValues(_.toSeq).toMap
-  }
-
-  /** The prior slice of a whole candidate list in one store pass:
-    * (mention, priors) rows for the candidates with at least one prior
-    * pair — the pairs [[priorsByCandidate]] gives each candidate, as a
-    * DataFrame whose rows can ride in a streamed candidate list. */
-  private def priorsByMention(cands: DataFrame, scoredStore: DataFrame): DataFrame =
+  /** The round's slice of the scored-pairs history (sub-score cache M4),
+    * in one store pass: one (mention, priors) row per candidate, `priors`
+    * being the stored pairs that touch it (a pair with candidates on both
+    * sides is in both groups; a candidate no pair touches has none). A
+    * decide(l) call only ever queries pairs with l on one side, so each
+    * candidate gets exactly the pairs it needs. The history stays a
+    * parquet-backed DataFrame (it grows without bound across rounds); only
+    * the slice reaches the driver, as the candidate rows
+    * ([[candidateRows]]). The candidates join the grouping itself rather
+    * than a later outer join, which would cost a round one more job. */
+  private[graft] def priorsByMention(cands: DataFrame, scoredStore: DataFrame): DataFrame = {
+    val m = cands.select(col("mention"))
     scoredStore
       .select(explode(array_distinct(array(col("subLabel"), col("supLabel")))).as("mention"),
         struct(col("subLabel"), col("supLabel"), col("p")).as("pair"))
-      .join(broadcast(cands.select(col("mention"))), "mention")
+      .join(broadcast(m), "mention")
+      .unionByName(m.withColumn("pair",
+        lit(null).cast("struct<subLabel:string,supLabel:string,p:double>")))
       .groupBy("mention").agg(collect_set(col("pair")).as("priors"))
+  }
 
   /** What every decide task of a round reads: the broadcast snapshot,
     * models, seed index and lexical table, and the round's settings. */
@@ -527,6 +509,59 @@ object KgPipeline {
       }.toDF("mention", "qvec")
     graft.retrieve.DistributedBandedRetrieve.seeds(
       spark, candVecs, embStore, center, dim, ctx.retrieve)
+  }
+
+  /** `run`'s phase clock: `timed(name)(f)` runs `f` as phase `name`, which
+    * tags the Spark jobs it starts with [[StageProperty]] and adds its wall
+    * time to the phase's total in `seconds`. */
+  private final class Phases(sc: org.apache.spark.SparkContext) {
+    val seconds = mutable.LinkedHashMap.empty[String, Double]
+    def apply[A](name: String)(f: => A): A = {
+      val t0 = System.nanoTime()
+      val outer = sc.getLocalProperty(StageProperty)
+      sc.setLocalProperty(StageProperty, name)
+      val out = try f finally sc.setLocalProperty(StageProperty, outer)
+      seconds(name) = seconds.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
+      out
+    }
+  }
+
+  /** A round's decide input: its top-k candidate list `top` as (mention,
+    * prior slice, seeds) rows in mention (= label) order. `slice` maps a
+    * candidate list to one (mention, priors) row per candidate
+    * ([[priorsByMention]]) and `seeds` to (mention, seeds) rows
+    * ([[retrieveSeeds]]); each is given only when the round has it. The
+    * slice, or else the list, is the base the seeds join onto. Round size
+    * picks only how the rows reach the driver: a round that fits one chunk
+    * collects the list in one top-k action and then, if it has a slice or
+    * seeds, collects the joined rows over the collected list; a `streamed`
+    * round checkpoints the list (extraction never runs twice) and its
+    * slice (one store pass) and streams the joined rows. */
+  private def candidateRows(spark: SparkSession, timed: Phases, top: DataFrame,
+                            streamed: Boolean, slice: Option[DataFrame => DataFrame],
+                            seeds: Option[DataFrame => DataFrame])
+      : Iterator[(String, Seq[ScoredPair], Seq[Long])] = {
+    import spark.implicits._
+    lazy val collected = timed("candidates")(top.as[String].collect().sorted)
+    if (!streamed && slice.isEmpty && seeds.isEmpty) collected.iterator.map(m => (m, Nil, Nil))
+    else {
+      val list =
+        if (streamed) timed("candidates")(top.localCheckpoint(eager = true))
+        else collected.toSeq.toDF("mention")
+      val base = slice.fold(list)(s =>
+        if (streamed) timed("prior_slice")(s(list).localCheckpoint(eager = true)) else s(list))
+      val joined = seeds.fold(base)(s => base.join(s(list), Seq("mention"), "left_outer"))
+      val Seq(pi, si) = Seq("priors", "seeds").map(c => joined.columns.indexOf(c))
+      def decode(row: Row): (String, Seq[ScoredPair], Seq[Long]) = {
+        def opt[A](i: Int): Seq[A] = if (i < 0 || row.isNullAt(i)) Nil else row.getSeq[A](i)
+        (row.getString(0), opt[Row](pi).map(p =>
+          ScoredPair(p.getString(0), p.getString(1), p.getDouble(2))), opt[Long](si))
+      }
+      if (streamed)
+        timed("candidates")(joined.orderBy("mention").toLocalIterator()).asScala.map(decode)
+      else timed(if (slice.isDefined) "prior_slice" else "decide")(
+        joined.collect().map(decode).sortBy(_._1)).iterator
+    }
   }
 
   /** Stage 3 for one chunk of at most [[DriverRows]] candidates, given as
@@ -859,8 +894,9 @@ object KgPipeline {
       s"checkpoint at $ckptDir has $resumeRound complete rounds but " +
         s"cfg.rounds=${cfg.rounds} — pass rounds >= $resumeRound (a re-run " +
         "over a completed checkpoint replays it; extra rounds extend it)")
+    val timed = new Phases(spark.sparkContext)
     // resume from the last complete round, or start at the seed
-    val state = Checkpoint.load(spark, ckptDir)
+    val state = timed("load")(Checkpoint.load(spark, ckptDir))
     val taxo = state.taxo
     // incremental decide-index state; a resumed run restores the persisted
     // RHP center so its banded probes are bit-identical to the uninterrupted
@@ -892,17 +928,6 @@ object KgPipeline {
     // the prior slice is skipped while the scored store has no rows: a
     // fresh run's rounds until one scores a pair
     var storeEmpty = resumeRound == 0
-
-    val phase = mutable.LinkedHashMap.empty[String, Double]
-    val sc = spark.sparkContext
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val outer = sc.getLocalProperty(StageProperty)
-      sc.setLocalProperty(StageProperty, name)
-      val out = try f finally sc.setLocalProperty(StageProperty, outer)
-      phase(name) = phase.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
-      out
-    }
 
     var r = resumeRound + 1
     while (r <= cfg.rounds) {
@@ -970,55 +995,16 @@ object KgPipeline {
         .limit(cfg.maxCandidatesPerRound)
         .select("mention")
       Checkpoint.startRound(ckptDir, r)
-      // the round's candidate list, computed once. A round that fits one
-      // chunk collects it with one top-k action; a larger round
-      // checkpoints it, so extraction never runs twice, and streams it
-      val oneChunk = cfg.maxCandidatesPerRound <= chunkRows
-      val (collected, checkpointed) = timed("candidates") {
-        if (oneChunk) (top.as[String].collect().sorted, null)
-        else (null, top.localCheckpoint(eager = true))
-      }
       val t0 = System.currentTimeMillis()
       val (ctx, seedSource) = timed("decide")(
         decideSetup(spark, taxo, models, cfg, r, embCache, embStore))
-      def seeds(cands: DataFrame): Option[DataFrame] = seedSource.left.toOption.map(center =>
-        retrieveSeeds(spark, ctx, cands, embStore, center, models.emb.dim))
-      // (mention, prior slice, seeds) rows in mention (= label) order. The
-      // distributed-retrieval seeds come from ONE banded pass over the
+      // the distributed-retrieval seeds come from ONE banded pass over the
       // round's candidate list (otherwise each task searches the broadcast
-      // index); the prior slice is ONE store pass, skipped while the store
-      // is empty. A larger round joins both onto its streamed list.
-      val rows: Iterator[(String, Seq[ScoredPair], Seq[Long])] =
-        if (oneChunk) {
-          val seeded = timed("decide") {
-            if (seedSource.isRight) collected.map(m => (m, Seq.empty[Long]))
-            else {
-              val cands = collected.toSeq.toDF("mention")
-              cands.join(seeds(cands).get, Seq("mention"), "left_outer")
-                .as[(String, Seq[Long])].collect().sortBy(_._1)
-                .map { case (m, ss) => (m, if (ss == null) Nil else ss) }
-            }
-          }
-          val priors = timed("prior_slice") {
-            if (storeEmpty) Map.empty[String, Seq[ScoredPair]]
-            else priorsByCandidate(collected.toSeq, scoredStore)
-          }
-          seeded.iterator.map { case (m, ss) => (m, priors.getOrElse(m, Nil), ss) }
-        } else {
-          val priors = timed("prior_slice") {
-            if (storeEmpty) None
-            else Some(priorsByMention(checkpointed, scoredStore).localCheckpoint(eager = true))
-          }
-          (seeds(checkpointed) ++ priors)
-            .foldLeft(checkpointed)(_.join(_, Seq("mention"), "left_outer"))
-            .orderBy("mention").toLocalIterator().asScala.map { row =>
-              def opt[A](c: String): Seq[A] =
-                if (!row.schema.fieldNames.contains(c) || row.isNullAt(row.fieldIndex(c))) Nil
-                else row.getSeq[A](row.fieldIndex(c))
-              (row.getString(0), opt[Row]("priors").map(p =>
-                ScoredPair(p.getString(0), p.getString(1), p.getDouble(2))), opt[Long]("seeds"))
-            }
-        }
+      // index); the prior slice is skipped while the store is empty
+      val rows = candidateRows(spark, timed, top, cfg.maxCandidatesPerRound > chunkRows,
+        if (storeEmpty) None else Some(priorsByMention(_, scoredStore)),
+        seedSource.left.toOption.map(center => (cands: DataFrame) =>
+          retrieveSeeds(spark, ctx, cands, embStore, center, models.emb.dim)))
       val seedMs = System.currentTimeMillis() - t0
 
       // 3. decide, chunk by chunk, every chunk against the same frozen
@@ -1215,7 +1201,7 @@ object KgPipeline {
     }
 
     if (sys.env.contains("GRAFT_PHASE_TIMES"))
-      println(phase.map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{\"phases\":{", ",", "}}"))
+      println(timed.seconds.map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{\"phases\":{", ",", "}}"))
 
     // O(1) provenance lookup; getOrElseUpdate keeps the FIRST round an
     // edge was minted in (same as the linear find this replaces)
