@@ -291,9 +291,9 @@ object KgPipeline {
     * this many candidates, taken in label order; [[decideChunk]] brings
     * each chunk's decisions, lineage and fresh scored pairs to the driver
     * in one action. A round with `maxCandidatesPerRound` ≤ this is one
-    * chunk: its candidates come to the driver in one collect, and its
-    * candidate rows in a second one only when it has a prior slice or
-    * distributed seeds ([[candidateRows]]). A larger round streams them. */
+    * chunk: its candidates come to the driver in one collect, its prior
+    * slice and distributed seeds, when it has them, in one more each
+    * ([[candidateRows]]). A larger round streams them. */
   val DriverRows = 100000
 
   /** One chunk's decide output: decisions label-sorted (the commit order),
@@ -303,25 +303,19 @@ object KgPipeline {
                                 scored: Seq[ScoredPair])
 
   /** The round's slice of the scored-pairs history (sub-score cache M4),
-    * in one store pass: one (mention, priors) row per candidate, `priors`
-    * being the stored pairs that touch it (a pair with candidates on both
-    * sides is in both groups; a candidate no pair touches has none). A
-    * decide(l) call only ever queries pairs with l on one side, so each
-    * candidate gets exactly the pairs it needs. The history stays a
-    * parquet-backed DataFrame (it grows without bound across rounds); only
-    * the slice reaches the driver, as the candidate rows
-    * ([[candidateRows]]). The candidates join the grouping itself rather
-    * than a later outer join, which would cost a round one more job. */
-  private[graft] def priorsByMention(cands: DataFrame, scoredStore: DataFrame): DataFrame = {
-    val m = cands.select(col("mention"))
+    * in one store pass: (mention, priors) rows for the candidates with at
+    * least one stored pair, `priors` being the pairs that touch it (a pair
+    * with candidates on both sides is in both groups). A decide(l) call
+    * only ever queries pairs with l on one side, so each candidate gets
+    * exactly the pairs it needs. The history stays a parquet-backed
+    * DataFrame (it grows without bound across rounds); only the slice
+    * reaches the driver, with the candidate rows ([[candidateRows]]). */
+  private[graft] def priorsByMention(cands: DataFrame, scoredStore: DataFrame): DataFrame =
     scoredStore
       .select(explode(array_distinct(array(col("subLabel"), col("supLabel")))).as("mention"),
         struct(col("subLabel"), col("supLabel"), col("p")).as("pair"))
-      .join(broadcast(m), "mention")
-      .unionByName(m.withColumn("pair",
-        lit(null).cast("struct<subLabel:string,supLabel:string,p:double>")))
+      .join(broadcast(cands.select(col("mention"))), "mention")
       .groupBy("mention").agg(collect_set(col("pair")).as("priors"))
-  }
 
   /** What every decide task of a round reads: the broadcast snapshot,
     * models, seed index and lexical table, and the round's settings. */
@@ -526,41 +520,44 @@ object KgPipeline {
     }
   }
 
-  /** A round's decide input: its top-k candidate list `top` as (mention,
-    * prior slice, seeds) rows in mention (= label) order. `slice` maps a
-    * candidate list to one (mention, priors) row per candidate
-    * ([[priorsByMention]]) and `seeds` to (mention, seeds) rows
-    * ([[retrieveSeeds]]); each is given only when the round has it. The
-    * slice, or else the list, is the base the seeds join onto. Round size
-    * picks only how the rows reach the driver: a round that fits one chunk
-    * collects the list in one top-k action and then, if it has a slice or
-    * seeds, collects the joined rows over the collected list; a `streamed`
-    * round checkpoints the list (extraction never runs twice) and its
-    * slice (one store pass) and streams the joined rows. */
-  private def candidateRows(spark: SparkSession, timed: Phases, top: DataFrame,
-                            streamed: Boolean, slice: Option[DataFrame => DataFrame],
+  /** A round's decide input: its candidate list as (mention, prior slice,
+    * seeds) rows in mention (= label) order. `list` is the list as `run`
+    * computed it once: collected and sorted (`Left`) for a round that fits
+    * one chunk, checkpointed (`Right`) for a larger one, whose rows are
+    * streamed. `slice` maps a list to (mention, priors) rows for the
+    * candidates with a stored pair ([[priorsByMention]]) and `seeds` to
+    * (mention, seeds) rows ([[retrieveSeeds]]); each is given only when the
+    * round has it. A collected list takes each part in one collect and
+    * looks its rows up by mention; with neither part the list is the rows,
+    * and no Dataset is built from it. A streamed list checkpoints its slice
+    * (one store pass) and joins both parts onto itself. */
+  private def candidateRows(spark: SparkSession, timed: Phases,
+                            list: Either[Array[String], DataFrame],
+                            slice: Option[DataFrame => DataFrame],
                             seeds: Option[DataFrame => DataFrame])
       : Iterator[(String, Seq[ScoredPair], Seq[Long])] = {
     import spark.implicits._
-    lazy val collected = timed("candidates")(top.as[String].collect().sorted)
-    if (!streamed && slice.isEmpty && seeds.isEmpty) collected.iterator.map(m => (m, Nil, Nil))
-    else {
-      val list =
-        if (streamed) timed("candidates")(top.localCheckpoint(eager = true))
-        else collected.toSeq.toDF("mention")
-      val base = slice.fold(list)(s =>
-        if (streamed) timed("prior_slice")(s(list).localCheckpoint(eager = true)) else s(list))
-      val joined = seeds.fold(base)(s => base.join(s(list), Seq("mention"), "left_outer"))
-      val Seq(pi, si) = Seq("priors", "seeds").map(c => joined.columns.indexOf(c))
-      def decode(row: Row): (String, Seq[ScoredPair], Seq[Long]) = {
-        def opt[A](i: Int): Seq[A] = if (i < 0 || row.isNullAt(i)) Nil else row.getSeq[A](i)
-        (row.getString(0), opt[Row](pi).map(p =>
-          ScoredPair(p.getString(0), p.getString(1), p.getDouble(2))), opt[Long](si))
-      }
-      if (streamed)
-        timed("candidates")(joined.orderBy("mention").toLocalIterator()).asScala.map(decode)
-      else timed(if (slice.isDefined) "prior_slice" else "decide")(
-        joined.collect().map(decode).sortBy(_._1)).iterator
+    def priors(row: Row, i: Int): Seq[ScoredPair] =
+      if (i < 0 || row.isNullAt(i)) Nil
+      else row.getSeq[Row](i).map(p => ScoredPair(p.getString(0), p.getString(1), p.getDouble(2)))
+    def ids(row: Row, i: Int): Seq[Long] = if (i < 0 || row.isNullAt(i)) Nil else row.getSeq[Long](i)
+    list match {
+      case Left(mentions) =>
+        lazy val cands = mentions.toSeq.toDF("mention")
+        def byMention[A](phase: String, part: Option[DataFrame => DataFrame],
+                         decode: (Row, Int) => Seq[A]): Map[String, Seq[A]] =
+          part.fold(Map.empty[String, Seq[A]])(f => timed(phase)(
+            f(cands).collect().iterator.map(row => row.getString(0) -> decode(row, 1)).toMap))
+        val seedsOf = byMention("decide", seeds, ids)
+        val priorsOf = byMention("prior_slice", slice, priors)
+        mentions.iterator.map(m => (m, priorsOf.getOrElse(m, Nil), seedsOf.getOrElse(m, Nil)))
+      case Right(cands) =>
+        val sliced = slice.map(f => timed("prior_slice")(f(cands).localCheckpoint(eager = true)))
+        val joined = (seeds.map(_(cands)) ++ sliced)
+          .foldLeft(cands)(_.join(_, Seq("mention"), "left_outer"))
+        val Seq(pi, si) = Seq("priors", "seeds").map(joined.columns.indexOf(_))
+        timed("candidates")(joined.orderBy("mention").toLocalIterator()).asScala
+          .map(row => (row.getString(0), priors(row, pi), ids(row, si)))
     }
   }
 
@@ -995,13 +992,20 @@ object KgPipeline {
         .limit(cfg.maxCandidatesPerRound)
         .select("mention")
       Checkpoint.startRound(ckptDir, r)
+      // the round's candidate list, computed once. A round that fits one
+      // chunk collects it with one top-k action; a larger round
+      // checkpoints it, so extraction never runs twice, and streams it
+      val list = timed("candidates") {
+        if (cfg.maxCandidatesPerRound <= chunkRows) Left(top.as[String].collect().sorted)
+        else Right(top.localCheckpoint(eager = true))
+      }
       val t0 = System.currentTimeMillis()
       val (ctx, seedSource) = timed("decide")(
         decideSetup(spark, taxo, models, cfg, r, embCache, embStore))
       // the distributed-retrieval seeds come from ONE banded pass over the
       // round's candidate list (otherwise each task searches the broadcast
       // index); the prior slice is skipped while the store is empty
-      val rows = candidateRows(spark, timed, top, cfg.maxCandidatesPerRound > chunkRows,
+      val rows = candidateRows(spark, timed, list,
         if (storeEmpty) None else Some(priorsByMention(_, scoredStore)),
         seedSource.left.toOption.map(center => (cands: DataFrame) =>
           retrieveSeeds(spark, ctx, cands, embStore, center, models.emb.dim)))
