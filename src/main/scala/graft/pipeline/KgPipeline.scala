@@ -30,8 +30,9 @@ import scala.jdk.CollectionConverters._
   *      store pass, skipped while the scored store is empty, and one
   *      function builds its (mention, prior slice, seeds) rows
   *      ([[candidateRows]]). Round size picks only how they reach the
-  *      driver: a round that fits one chunk collects them, a larger one
-  *      checkpoints its list once and streams them.
+  *      driver: a round that fits one chunk collects its list, slice and
+  *      seeds apart and pairs them up by mention; a larger one checkpoints
+  *      its list once and streams the rows with both joined on.
   *   3. LINK + DECIDE — one task per candidate batch embeds its batch,
   *      kNN-retrieves bases from the broadcast index (ICON manual mode
   *      with auto_bases, icon.py:515-556), and runs the enhanced traversal
