@@ -7,8 +7,10 @@ import graft.retrieve.VectorIndex
 import graft.spark.GraphOps
 import graft.taxo.{CycleException, MutableTaxo}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
@@ -19,16 +21,22 @@ import scala.jdk.CollectionConverters._
   * web-scale corpus.
   *
   * Per round, against a frozen broadcast taxonomy snapshot:
-  *   1. EXTRACT — per-partition mention detection over the corpus (codegen'd
-  *      column ops, no UDF): bigram candidates + frequencies.
-  *   2. DEDUPE — anti-join mention tokenset-hashes against the taxonomy's
-  *      lexical table (the reference's lexical cache P1) and keep the top
-  *      `maxCandidatesPerRound` by frequency. The round then runs in
-  *      chunks of at most [[DriverRows]] candidates, taken in mention
-  *      (= label) order. The round slices the scored-pairs history down
-  *      to the pairs touching its candidates (sub-score cache M4) in one
-  *      store pass, skipped while the scored store is empty, and one
-  *      function builds its (mention, prior slice, seeds) rows
+  *   1. EXTRACT — bigram mention counts over the corpus, once per run
+  *      and cached while a later round reads them: html pages through a
+  *      per-partition kernel over the scan's rows, merged by `reduceByKey`
+  *      ([[mentionCountsFromHtml]]); text through codegen'd column ops and
+  *      one aggregate ([[extractMentions]]).
+  *   2. DEDUPE — drop mentions whose tokenset hash is in the round's
+  *      broadcast sorted array of snapshot-label and resolved-mention
+  *      hashes (the reference's lexical cache P1) and keep the top
+  *      `maxCandidatesPerRound` by frequency ([[candidateList]]): one
+  *      `takeOrdered` job for a round that fits one chunk, a sorted,
+  *      limited and checkpointed DataFrame for a larger one. The round
+  *      then runs in chunks of at most [[DriverRows]] candidates, taken in
+  *      mention (= label) order. The round slices the scored-pairs
+  *      history down to the pairs touching its candidates (sub-score cache
+  *      M4) in one store pass, skipped while the scored store is empty,
+  *      and one function builds its (mention, prior slice, seeds) rows
   *      ([[candidateRows]]). Round size picks only how they reach the
   *      driver: a round that fits one chunk collects its list, slice and
   *      seeds apart and pairs them up by mention; a larger one checkpoints
@@ -204,31 +212,31 @@ object KgPipeline {
     * scan work — the per-partition imperative form (the documented
     * last-resort, justified here by measurement) skips the 668M-row
     * operator traffic; only per-partition distinct mentions (bounded by
-    * vocabulary) reach the final groupBy.
+    * vocabulary) reach the `reduceByKey` that merges them.
     *
-    * The html column is read as UTF-8 bytes, and each page takes one of two
-    * paths ([[MentionScanner.PageScan]]): a page whose bytes are all < 0x80
-    * is counted by a byte loop that tokenizes the raw bytes in place; any
-    * other page is decoded and takes the char path (HtmlScanner +
-    * CountingSink). The char path stays because non-ASCII chars can
+    * The kernel reads the scan's rows themselves (`queryExecution.toRdd`),
+    * one `getBytes` of the page's UTF-8 bytes per page, and each page takes
+    * one of two paths ([[MentionScanner.PageScan]]): a page whose bytes are
+    * all < 0x80 is counted by a byte loop that tokenizes the raw bytes in
+    * place; any other page is decoded and takes the char path (HtmlScanner
+    * + CountingSink). The char path stays because non-ASCII chars can
     * lowercase to ASCII — U+0130 'İ' → 'i', U+212A KELVIN SIGN → 'k', so
     * `<scrİpt>` opens a script block — and the full-string lowercase the
     * column twin applies can expand one char into several. Both paths
     * count into one per-partition state, capped at `maxStateEntries`
-    * (> 0) entries. */
-  def extractMentionsFromHtml(corpus: DataFrame, htmlCol: String, minFreq: Long,
-                              maxStateEntries: Int = 1 << 22): DataFrame = {
+    * (> 0) entries. The result is unevaluated apart from the corpus plan's
+    * own exchanges, which adaptive execution runs when the rows are taken. */
+  def mentionCountsFromHtml(corpus: DataFrame, htmlCol: String, minFreq: Long,
+                            maxStateEntries: Int = 1 << 22): RDD[(String, Long)] = {
     require(maxStateEntries > 0, s"maxStateEntries must be positive, got $maxStateEntries")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    corpus.select(col(htmlCol).cast("binary")).as[Array[Byte]]
+    corpus.select(col(htmlCol).cast("string")).queryExecution.toRdd
       .mapPartitions { it =>
-        // Unlike the hash-aggregate plan this replaces, the per-partition
-        // counter can't spill — so it's capped: once the chunk's distinct
-        // bigrams OR interned tokens reach maxStateEntries (default 2^22;
-        // a state with 2^22 short tokens and 2^22 - 1 bigrams measures
-        // 268 MB by SizeEstimator) the partial counts flush as rows and the
-        // state resets; the downstream sum-groupBy merges partials exactly.
+        // The per-partition counter can't spill — so it's capped: once the
+        // chunk's distinct bigrams OR interned tokens reach maxStateEntries
+        // (default 2^22; a state with 2^22 short tokens and 2^22 - 1
+        // bigrams measures 268 MB by SizeEstimator) the partial counts
+        // flush as pairs and the state resets; the reduceByKey merges
+        // partials exactly.
         // The cap holds INSIDE a document too: a page scan is resumable,
         // so on mid-document overflow the scan PAUSES, this iterator
         // streams the partial counts out, and the scan continues from the
@@ -253,8 +261,11 @@ object KgPipeline {
                   scan.drainReset()
                 } else inPage = false
               } else if (it.hasNext) {
-                val h = it.next()
-                if (h != null && h.nonEmpty) { scan.start(h); inPage = true }
+                val row = it.next()
+                if (!row.isNullAt(0)) {
+                  val h = row.getUTF8String(0).getBytes
+                  if (h.nonEmpty) { scan.start(h); inPage = true }
+                }
               } else {
                 finalDrained = true
                 inner = state.iterator
@@ -271,9 +282,65 @@ object KgPipeline {
           }
         }
       }
-      .toDF("mention", "cnt")
-      .groupBy("mention").agg(sum("cnt").as("freq"))
-      .filter(col("freq") >= minFreq)
+      .reduceByKey(_ + _, corpus.sparkSession.sessionState.conf.numShufflePartitions)
+      .filter(_._2 >= minFreq)
+  }
+
+  /** [[mentionCountsFromHtml]] as (mention, freq) rows. */
+  def extractMentionsFromHtml(corpus: DataFrame, htmlCol: String, minFreq: Long,
+                              maxStateEntries: Int = 1 << 22): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    mentionCountsFromHtml(corpus, htmlCol, minFreq, maxStateEntries).toDF("mention", "freq")
+  }
+
+  /** Stage 1 of a run: the corpus's (mention, freq) counts at ≥ `minFreq`,
+    * from the html kernel or from [[extractMentions]]' rows. Adaptive
+    * execution runs the aggregate's shuffle when the text rows are taken,
+    * so the call starts Spark jobs: `run` makes it inside its candidates
+    * phase. */
+  private[graft] def mentionCounts(corpus: DataFrame, column: String, minFreq: Long,
+                                   htmlInput: Boolean): RDD[(String, Long)] =
+    if (htmlInput) mentionCountsFromHtml(corpus, column, minFreq)
+    else {
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      extractMentions(corpus, column, minFreq).as[(String, Long)].rdd
+    }
+
+  /** Candidate order: frequency descending, then mention ascending — the
+    * order of `orderBy(desc("freq"), asc("mention"))`, since mentions are
+    * `[a-z0-9]` bigrams, whose String and UTF-8 byte orders agree. */
+  private val ByFreq: Ordering[(String, Long)] = (a, b) => {
+    val c = java.lang.Long.compare(b._2, a._2)
+    if (c != 0) c else a._1.compareTo(b._1)
+  }
+
+  /** Stage 2: the round's candidate list — the `k` most frequent mentions
+    * whose tokenset hash is neither a snapshot label's nor a `resolved`
+    * mention's (the lexical cache P1). The excluded hashes travel as one
+    * broadcast sorted array. A round that fits one chunk of `chunkRows`
+    * takes its list in one `takeOrdered` job, sorted by mention (`Left`); a
+    * larger one sorts, limits and checkpoints it as a DataFrame (`Right`),
+    * so the counts are read once, and its rows are streamed. */
+  private[graft] def candidateList(spark: SparkSession, counts: RDD[(String, Long)],
+                                   taxo: MutableTaxo, resolved: Iterator[String], k: Int,
+                                   chunkRows: Int)
+      : Either[Array[String], DataFrame] = {
+    val excluded = (taxo.nodes.iterator.map(n => Tokenset.hash64(taxo.getLabel(n))) ++
+      resolved.map(Tokenset.hash64)).toArray
+    java.util.Arrays.sort(excluded)
+    val bExcluded = spark.sparkContext.broadcast(excluded)
+    val fresh = counts.filter(m =>
+      java.util.Arrays.binarySearch(bExcluded.value, Tokenset.hash64(m._1)) < 0)
+    try {
+      if (k <= chunkRows) Left(fresh.takeOrdered(k)(ByFreq).map(_._1).sorted)
+      else {
+        import spark.implicits._
+        Right(fresh.toDF("mention", "freq").orderBy(col("freq").desc, col("mention").asc)
+          .limit(k).select("mention").localCheckpoint(eager = true))
+      }
+    } finally bExcluded.destroy()
   }
 
   /** Flat decision row for Dataset encoding. */
@@ -917,11 +984,12 @@ object KgPipeline {
     val allDeltas = mutable.ArrayBuffer.from(state.deltas)
     val sameAs = mutable.ArrayBuffer.from(state.sameAs)
 
-    // cached only when a later round of this run reads the counts again
-    val mentions = {
-      val m = if (htmlInput) extractMentionsFromHtml(corpus, textCol, cfg.minMentionFreq)
-        else extractMentions(corpus, textCol, cfg.minMentionFreq)
-      if (cfg.rounds - resumeRound > 1) m.persist() else m
+    // computed in the first round's candidates phase, and cached only
+    // when a later round of this run reads the counts again
+    val reread = cfg.rounds - resumeRound > 1
+    lazy val counts = {
+      val c = mentionCounts(corpus, textCol, cfg.minMentionFreq, htmlInput)
+      if (reread) c.persist(StorageLevel.MEMORY_AND_DISK) else c
     }
     // the prior slice is skipped while the scored store has no rows: a
     // fresh run's rounds until one scores a pair
@@ -963,10 +1031,10 @@ object KgPipeline {
           }.toDF("vec_id", "embedding").persist()
         embFullWrite = true
       }
-      // 2. dedupe candidates against the taxonomy lexical table + every
+      // 2. dedupe candidates against the taxonomy's label hashes + every
       // mention already RESOLVED in a prior round: an eqv-decided mention's
       // canonical node is in the taxonomy (under a different label, so the
-      // lexical anti-join alone re-admits it) and a merged-away mint's
+      // label hashes alone re-admit it) and a merged-away mint's
       // label re-mints then re-merges — either way the mention re-decides
       // the identical outcome every round, appending a duplicate sameAs
       // row per round and permanently occupying a candidate slot (at
@@ -983,23 +1051,9 @@ object KgPipeline {
       // reference has the same property (icon.py processes each mention
       // once), so the divergence is from a hypothetical oracle, not from
       // the reference semantics.
-      val resolvedHashes = sameAs.iterator.map(s => Tokenset.hash64(s._1)).toSet
-      val lexHashes =
-        (taxo.nodes.map(n => Tokenset.hash64(taxo.getLabel(n))) ++ resolvedHashes).toDF("h")
-      val hashUdf = udf((s: String) => Tokenset.hash64(s))
-      val top = mentions.withColumn("h", hashUdf(col("mention")))
-        .join(lexHashes, Seq("h"), "left_anti")
-        .orderBy(col("freq").desc, col("mention").asc)
-        .limit(cfg.maxCandidatesPerRound)
-        .select("mention")
       Checkpoint.startRound(ckptDir, r)
-      // the round's candidate list, computed once. A round that fits one
-      // chunk collects it with one top-k action; a larger round
-      // checkpoints it, so extraction never runs twice, and streams it
-      val list = timed("candidates") {
-        if (cfg.maxCandidatesPerRound <= chunkRows) Left(top.as[String].collect().sorted)
-        else Right(top.localCheckpoint(eager = true))
-      }
+      val list = timed("candidates")(candidateList(spark, counts, taxo,
+        sameAs.iterator.map(_._1), cfg.maxCandidatesPerRound, chunkRows))
       val t0 = System.currentTimeMillis()
       val (ctx, seedSource) = timed("decide")(
         decideSetup(spark, taxo, models, cfg, r, embCache, embStore))
@@ -1111,7 +1165,7 @@ object KgPipeline {
       }
       r += 1
     }
-    mentions.unpersist()
+    if (reread) counts.unpersist()
 
     // final: transitive reduction, preserving seed edges (icon.py:610-614)
     val seed = seedTaxo()

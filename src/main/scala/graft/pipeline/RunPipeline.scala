@@ -64,9 +64,12 @@ object RunPipeline {
       // the pipeline drives GraphOps fixpoints from driver-built frames in
       // the distributed-canonicalize path; see GraphOps session note
       .config("spark.sql.constraintPropagation.enabled", "false")
-      // candidate selection is orderBy(freq,mention).limit(cap): for large
-      // caps TakeOrderedAndProject would merge per-partition top-k ON THE
-      // DRIVER — force the sort+GlobalLimit plan (executor-side) past 100k
+      // a round too large for one decide chunk selects its candidates with
+      // orderBy(freq,mention).limit(cap): for large caps
+      // TakeOrderedAndProject would merge per-partition top-k ON THE
+      // DRIVER — force the sort+GlobalLimit plan (executor-side) past 100k.
+      // A one-chunk round (cap ≤ KgPipeline.DriverRows) takes its list
+      // with RDD.takeOrdered, which this setting does not touch
       .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -113,14 +116,25 @@ object RunPipeline {
       KgPipeline.PipelineConfig(rounds = rounds, maxCandidatesPerRound = maxCands,
         minMentionFreq = minFreq, distributedRetrieveNodes = distNodes,
         maxSnapshotNodes = maxNodes, move = moveCfg), ckpt, htmlInput = isHtml)
-    println(s"[pipeline] rounds run: ${result.roundsRun}; triples: ${result.triples.count()}; " +
-      s"heap after: ${heapMb()} MB")
+    val heapAfter = heapMb()
+    // the triples are a local relation: count and sort the rows the driver
+    // holds (its collect starts no job; a count or a sort in Spark ships
+    // them all in one task)
+    val triples = result.triples.collect()
+    println(s"[pipeline] rounds run: ${result.roundsRun}; triples: ${triples.length}; " +
+      s"heap after: $heapAfter MB")
     if (embedLatencyMs > 0)
       println(s"[pipeline] embedder: ${LatencyEmbedder.calls.get()} invocations / " +
         s"${LatencyEmbedder.labels.get()} labels at ${embedLatencyMs} ms/invocation -> " +
         f"${LatencyEmbedder.calls.get() * embedLatencyMs / 1000.0}%.1f s serial model wall " +
         "(divide by occupied cores for the parallel floor)")
-    result.triples.orderBy("subj", "pred", "obj").show(10, truncate = false)
+    // the first 10 in show's layout; an 11th row keeps show's "only
+    // showing top 10 rows" line
+    val shown = triples
+      .sortBy(t => (Option(t.getString(0)), Option(t.getString(1)), Option(t.getString(2))))
+      .take(11)
+    spark.createDataFrame(java.util.Arrays.asList(shown: _*), result.triples.schema)
+      .show(10, truncate = false)
     spark.stop()
   }
 }

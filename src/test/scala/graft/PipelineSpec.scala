@@ -3,9 +3,11 @@ package graft
 import graft.models.{Embedder, HashNgramEmbedder}
 import graft.pipeline.KgPipeline
 import graft.webtext.WebtextGen
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Call-counting embedder wrapper: verifies the M1 batch contract (one
   * model invocation per ≤64-label chunk, never one per row). Counters live
@@ -34,6 +36,9 @@ class PipelineSpec extends SparkSpecBase {
     WebtextGen.generate(spark, n, parts)
       .select(col("url"), graft.extract.HtmlExtract.extractBinary(col("html")).as("text"))
 
+  private def htmlCorpus(n: Int, parts: Int) =
+    WebtextGen.generate(spark, n, parts).select(col("url"), col("html"))
+
   private def cfg(rounds: Int) = KgPipeline.PipelineConfig(
     rounds = rounds, maxCandidatesPerRound = 40, minMentionFreq = 2)
 
@@ -42,13 +47,16 @@ class PipelineSpec extends SparkSpecBase {
     df.select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
   }
 
-  /** The `StageProperty` phase of every Spark job `f` starts. */
-  private def jobPhases(f: => Unit): Seq[String] = {
-    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private def phaseOf(e: SparkListenerJobStart): String =
+    String.valueOf(e.properties.getProperty(KgPipeline.StageProperty))
+
+  /** The start event of every Spark job `f` starts. */
+  private def jobStarts(f: => Unit): Seq[SparkListenerJobStart] = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        phases.add(String.valueOf(e.properties.getProperty(KgPipeline.StageProperty)))
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
     }
+    def markerSeen = starts.iterator.asScala.exists(phaseOf(_) == "marker")
     spark.sparkContext.addSparkListener(listener)
     try {
       f
@@ -58,11 +66,14 @@ class PipelineSpec extends SparkSpecBase {
       try spark.range(1).count()
       finally spark.sparkContext.setLocalProperty(KgPipeline.StageProperty, null)
       val deadline = System.nanoTime() + 30e9.toLong
-      while (!phases.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(phases.contains("marker"), "listener saw no marker job")
-      phases.toArray(Array.empty[String]).toSeq.filter(_ != "marker")
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "listener saw no marker job")
+      starts.iterator.asScala.filter(phaseOf(_) != "marker").toSeq
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** The `StageProperty` phase of every Spark job `f` starts. */
+  private def jobPhases(f: => Unit): Seq[String] = jobStarts(f).map(phaseOf)
 
   private def fullRows(df: org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
@@ -102,6 +113,45 @@ class PipelineSpec extends SparkSpecBase {
     // pair touches, has no group
     assert(slice == Map("a" -> Set(("a", "x", 0.9), ("z", "a", 0.5)),
       "x" -> Set(("a", "x", 0.9))))
+  }
+
+  test("the candidate list equals the anti-join top-k query it replaced") {
+    import spark.implicits._
+    import graft.lexical.Tokenset
+    // one bigram per page, `n` pages each: ties at the 3rd and 4th places,
+    // "join joins" with the hash of the label "join", "tables scan" with
+    // that of the label "table scan" and "queries plans" with that of the
+    // resolved mention "query plan"
+    val freqs = Seq("alpha beta" -> 6, "join joins" -> 5, "tables scan" -> 5,
+      "queries plans" -> 5, "gamma delta" -> 4, "kappa lambda" -> 3, "omega sigma" -> 3,
+      "theta iota" -> 3, "rho tau" -> 3, "zeta eta" -> 1)
+    val pages = spark.sparkContext
+      .parallelize(scala.util.Random.shuffle(freqs.flatMap { case (m, n) => Seq.fill(n)(m) }), 3)
+      .toDF("text")
+    val taxo = KgPipeline.seedTaxo()
+    taxo.addNode(100L, Some("table scan"))
+    taxo.addEdge(100L, 12L, "original")
+    val resolved = Seq("query plan")
+    // the query, over the column path's counts: a left-anti join of the
+    // mention hashes against the label and resolved hashes, top k by
+    // (freq desc, mention asc)
+    val hashUdf = udf((m: String) => Tokenset.hash64(m))
+    val lexHashes = (taxo.nodes.map(n => Tokenset.hash64(taxo.getLabel(n))) ++
+      resolved.map(Tokenset.hash64)).toDF("h")
+    def reference(k: Int) = KgPipeline.extractMentions(pages, "text", 2L)
+      .withColumn("h", hashUdf(col("mention")))
+      .join(lexHashes, Seq("h"), "left_anti")
+      .orderBy(desc("freq"), asc("mention")).limit(k)
+      .select("mention").as[String].collect().sorted.toSeq
+    assert(reference(4) == Seq("alpha beta", "gamma delta", "kappa lambda", "omega sigma"))
+    for (html <- Seq(false, true); k <- Seq(3, 4, 20); chunkRows <- Seq(k, 1)) {
+      val counts = KgPipeline.mentionCounts(pages, "text", 2L, html)
+      val got = KgPipeline.candidateList(spark, counts, taxo, resolved.iterator, k, chunkRows) match {
+        case Left(list) => list.toSeq
+        case Right(df) => df.as[String].collect().sorted.toSeq
+      }
+      assert(got == reference(k), s"html $html, k $k, chunks of $chunkRows")
+    }
   }
 
   test("pipeline output is identical across parallelism levels") {
@@ -690,21 +740,55 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("every Spark job of a fresh and of a resumed run carries a phase") {
-    // a whole-round chunk, and chunks of 7 (a streamed round)
-    for (k <- Seq(KgPipeline.DriverRows, 7)) {
-      def run(rounds: Int, dir: String) = KgPipeline.run(spark, corpus(300, 4), "text",
-        KgPipeline.domainModels(), cfg(rounds), dir, htmlInput = false, k)
+    // a whole-round chunk, and chunks of 7 (a streamed round); text and
+    // html input
+    for (k <- Seq(KgPipeline.DriverRows, 7); html <- Seq(false, true)) {
+      val corp = if (html) htmlCorpus(300, 4) else corpus(300, 4)
+      def run(rounds: Int, dir: String) = KgPipeline.run(spark, corp, if (html) "html" else "text",
+        KgPipeline.domainModels(), cfg(rounds), dir, htmlInput = html, k)
       val fresh = jobPhases(run(2, Files.createTempDirectory("kgtag_full").toString))
       val part = Files.createTempDirectory("kgtag_part").toString
       run(1, part)
       val resumed = jobPhases(run(2, part))
+      val what = s"chunks of $k, html $html"
       for ((name, seen) <- Seq("fresh" -> fresh, "resumed" -> resumed)) {
-        assert(seen.nonEmpty, s"$name run, chunks of $k")
-        assert(!seen.contains("null"), s"$name run, chunks of $k, phases seen: $seen")
+        assert(seen.nonEmpty, s"$name run, $what")
+        assert(!seen.contains("null"), s"$name run, $what, phases seen: $seen")
       }
       // the resumed run's load reads the round-1 checkpoint with Spark jobs
-      assert(resumed.contains("load"), s"chunks of $k, phases seen: $resumed")
+      assert(resumed.contains("load"), s"$what, phases seen: $resumed")
     }
+  }
+
+  test("an html run equals the text run over the extracted text of the same pages") {
+    def run(corp: org.apache.spark.sql.DataFrame, column: String, html: Boolean) =
+      fullRows(KgPipeline.run(spark, corp, column, KgPipeline.domainModels(), cfg(2),
+        Files.createTempDirectory("kghtml").toString, htmlInput = html).triples)
+    val fromHtml = run(htmlCorpus(300, 4), "html", html = true)
+    assert(fromHtml.exists(_._4 == 2), "no round-2 triple")
+    assert(fromHtml == run(corpus(300, 4), "text", html = false))
+  }
+
+  test("a one-chunk html round takes its candidate list in one Spark job, from counts cached across rounds") {
+    // the candidate query this replaced (aggregate, anti-join, sort and
+    // limit over the cast("binary") scan) started 3 candidates jobs per
+    // one-chunk html round, at local[4], in round 1 as in round 2
+    val scanned = spark.sparkContext.longAccumulator("pages scanned")
+    val scan = udf { (h: String) => scanned.add(1); h }.asNondeterministic()
+    val corp = htmlCorpus(300, 4).select(col("url"), scan(col("html")).as("html"))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val starts = jobStarts {
+      KgPipeline.run(spark, corp, "html", KgPipeline.domainModels(), cfg(2),
+        Files.createTempDirectory("kghtmljobs").toString, htmlInput = true)
+    }
+    val candidates = starts.filter(phaseOf(_) == "candidates")
+    assert(candidates.size == 2, s"phases seen: ${starts.map(phaseOf)}")
+    // round 2 reads the counts round 1 cached: the corpus is scanned once
+    assert(scanned.value == 300L)
+    assert(candidates.last.stageInfos.exists(_.rddInfos.exists(
+      _.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    // and the cache is released when the run ends
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
   }
 
   test("compaction with the embedding store: resume from rounds 1 and 2 equals the uninterrupted run") {
